@@ -52,8 +52,10 @@ assignment grades as first-class alongside SURVEY.md §2.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..memo import memo
 
 LANGID_N = 3  # character trigrams
 LANGID_BUCKETS = 1024  # hashed feature space (config constant, not data)
@@ -244,23 +246,22 @@ def langid_score(
     )
 
 
-# Constructed-expression memo (r13 opt): assembling the candidates array
-# costs ~0.95 s of pure DRIVER time per call at 16 langs x 1024 buckets
-# (~0.35 s parsing the weight-array literals, ~0.6 s building the fold
-# lambdas through py4j) and is a deterministic function of (input-column
-# expression, model object). The scorer queries rebuild the identical
-# expression every invocation over the SAME session-cached model dict —
-# memoize the finished Column. Column expression trees are immutable and
-# freely reusable across plans. r14 hardening (ADVICE r13): the key is
-# an explicit STRUCTURAL description supplied by the caller (how bcol
-# was built: input column repr, n, buckets, max_chars) — never a
-# normalized str(bcol), whose regex collapsed real column names like
-# text_1/text_2 into one key; and the cached value pins the model dict
-# (strong reference), so id(model) cannot be recycled by GC and serve a
-# stale weight table to a new model at the same address. Entries from
-# other SparkContexts are purged so a session restart cannot serve dead
-# py4j references.
-_CANDIDATES_CACHE: dict = {}
+def _grams_key(text: Column, *params) -> tuple | None:
+    """Memo key of the gram-bucket candidates over ``text``, or None
+    (build fresh) unless ``text`` is a plain unbound reference
+    (``F.col("text")``). ``df1["text"]`` and ``df2["text"]`` print alike
+    but each resolves to its own DataFrame's attribute, so an expression
+    built on one fails to analyze on the other (MISSING_ATTRIBUTES)."""
+    jc = getattr(text, "_jc", None)
+    if jc is None:
+        return None
+    node = jc.node()
+    if (
+        node.getClass().getSimpleName() != "UnresolvedAttribute"
+        or node.planId().isDefined()
+    ):
+        return None
+    return ("grams", node.sql(), *params)
 
 
 def _candidates_array(
@@ -273,25 +274,15 @@ def _candidates_array(
     bucket-array column — the one construction every scorer shares so
     the tie rule / cast discipline cannot fork (code-review r11):
     ordering the structs ranks by max score first, smallest language on
-    ties. Memoized per (session, caller-declared structural key, model
-    identity) when ``cache_key`` is given — the caller asserts that the
-    key fully determines bcol's expression tree; passing None builds
-    fresh (no caching). See _CANDIDATES_CACHE."""
-    from pyspark import SparkContext
+    ties.
 
-    sc = SparkContext._active_spark_context
-    app_id = sc.applicationId if sc is not None else None
-    key = None
-    if cache_key is not None:
-        key = (app_id, cache_key, id(model))
-        got = _CANDIDATES_CACHE.get(key)
-        # `is model` re-check is belt-and-braces: the strong ref in the
-        # value already prevents id reuse while the entry lives
-        if got is not None and got[1] is model:
-            return got[0]
-        for k in [k for k in _CANDIDATES_CACHE if k[0] != app_id]:
-            del _CANDIDATES_CACHE[k]
-
+    Building it costs ~0.95 s of pure DRIVER time at 16 langs x 1024
+    buckets (~0.35 s parsing the weight-array literals, ~0.6 s building
+    the fold lambdas through py4j), and Column trees are immutable, so
+    it is memoized when ``cache_key`` is given: the caller asserts that
+    the key fully determines bcol's expression tree; None builds fresh.
+    The model enters the key by identity, and the stored value pins the
+    model dict so its id() cannot be recycled while the entry lives."""
     def _fold(weights: Column) -> Column:
         # closure helper: PySpark derives higher-order-function arity from
         # the Python signature, so the merge lambda must take exactly two
@@ -301,25 +292,32 @@ def _candidates_array(
             lambda acc, b: acc + F.element_at(weights, b.cast("int") + 1),
         )
 
-    candidates = []
-    for lang in sorted(model):
-        # ONE parsed expression per weight vector, not F.lit(list): building
-        # a 1024-element array literal through py4j cost ~1 s PER LANGUAGE
-        # of plan-construction time per invocation (profiled r12:
-        # langid_confidence construct=2.9 s vs execute=1.5 s at sf0.1) —
-        # the same literal-array lesson the r5 bench notes record for the
-        # ANN centroid planes.
-        arr = F.expr(
-            "array(" + ",".join(f"{w}L" for w in model[lang]) + ")"
-        )
-        score = _fold(arr)
-        candidates.append(
-            F.struct((-score).alias("neg"), F.lit(lang).alias("lang"))
-        )
-    out = F.array(*candidates)
-    if key is not None:
-        _CANDIDATES_CACHE[key] = (out, model)
-    return out
+    def build() -> Column:
+        candidates = []
+        for lang in sorted(model):
+            # ONE parsed expression per weight vector, not F.lit(list):
+            # building a 1024-element array literal through py4j cost ~1 s
+            # PER LANGUAGE of plan-construction time per invocation
+            # (profiled r12: langid_confidence construct=2.9 s vs
+            # execute=1.5 s at sf0.1) — the same literal-array lesson the
+            # r5 bench notes record for the ANN centroid planes.
+            arr = F.expr(
+                "array(" + ",".join(f"{w}L" for w in model[lang]) + ")"
+            )
+            score = _fold(arr)
+            candidates.append(
+                F.struct((-score).alias("neg"), F.lit(lang).alias("lang"))
+            )
+        return F.array(*candidates)
+
+    spark = SparkSession.getActiveSession()
+    if cache_key is None or spark is None:
+        return build()
+    return memo(
+        spark,
+        ("langid_candidates", cache_key, id(model)),
+        lambda: (build(), model),
+    )[0]
 
 
 def _best_from_buckets(
@@ -349,10 +347,7 @@ def langid_ranked_expr(
         _candidates_array(
             gram_buckets_expr(text, n, buckets, max_chars),
             model,
-            # str(text) is the raw Column repr (no normalization): a text
-            # expression whose repr varies per construction (lambda
-            # counters) just misses the cache, which is the safe direction
-            cache_key=("grams", str(text), n, buckets, max_chars),
+            cache_key=_grams_key(text, n, buckets, max_chars),
         )
     )
     return F.when(text.isNotNull(), ranked)
@@ -377,7 +372,7 @@ def langid_best_expr(
     best = _best_from_buckets(
         gram_buckets_expr(text, n, buckets, max_chars),
         model,
-        cache_key=("grams", str(text), n, buckets, max_chars),
+        cache_key=_grams_key(text, n, buckets, max_chars),
     )
     return F.when(text.isNotNull(), best)
 

@@ -9,10 +9,10 @@ loader is where partition discovery would plug in.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, TimestampNTZType
+
+from ..memo import fixture_spec, memo
 
 TABLE_NAMES = (
     "region",
@@ -27,46 +27,17 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
-
-# Per-session table-handle cache: `spark.read.parquet` pays a JVM file
-# listing + footer schema read on EVERY call (~0.1-0.3 s per table), and a
-# query that loads 3 tables re-pays it per invocation. A DataFrame is an
-# immutable plan, so the handle is reusable; entries from stopped/restarted
-# sessions are purged on the next cache miss. This mirrors what a
-# catalog table gives Spark for free (a cached InMemoryFileIndex) — and what
-# the DuckDB oracle side already enjoys (views created once, outside the
-# timed loop). Caveat, same as catalog tables: the file listing is
-# snapshotted — external writers appending files need `refresh_tables()`.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def refresh_tables() -> None:
-    """Drop every cached table handle (re-list files on next load)."""
-    _TABLE_CACHE.clear()
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    # Purge handles from other (stopped) sessions before inserting: one
-    # SparkSession is active per process in this engine, so any key with a
-    # different applicationId pins defunct JVM plans — without this, a
-    # long-lived process restarting sessions (pytest, notebooks) grows the
-    # cache without bound.
-    for k in [k for k in _TABLE_CACHE if k[0] != app_id]:
-        del _TABLE_CACHE[k]
-    df = _load_table_uncached(spark, sf_dir, name)
-    _TABLE_CACHE[key] = df
-    return df
+    """The table's DataFrame, memoized per session and file content: a
+    DataFrame is an immutable plan, so the handle is reusable, and reuse
+    skips `spark.read.parquet`'s JVM file listing + footer schema read
+    (~0.1-0.3 s per table) — what a catalog table's cached
+    InMemoryFileIndex gives Spark for free."""
+    return memo(
+        spark,
+        fixture_spec("table", sf_dir, name),
+        lambda: _load_table_uncached(spark, sf_dir, name),
+    )
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

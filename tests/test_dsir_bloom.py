@@ -260,24 +260,24 @@ def test_dsir_ratio_literal_default_uses_half_up_rounding(spark):
     assert ratios[0] == spark_default
 
 
-def test_bloom_gate_query_builds_reference_artifacts_once(spark, sf_dir):
+def test_bloom_gate_query_builds_reference_artifacts_once(spark, sf_dir, tmp_path):
     """r12 fix for the r11 driver-session sensitivity: repeated
     invocations of the registered query must REUSE the session's
     prepared (digest checkpoint, bitmap) pair instead of re-collecting
     set bits and re-checkpointing per call."""
+    import shutil
     from unittest import mock
 
+    from futures_eos_cdc_spark.memo import stats
     from futures_eos_cdc_spark.operators import bloom
-    from futures_eos_cdc_spark.plans import dataprep
     from futures_eos_cdc_spark.plans.registry import QUERIES
 
-    dataprep._BLOOM_PREPARED.clear()
-    with mock.patch.object(
-        dataprep, "_BLOOM_PREPARED", {}
-    ) as cache, mock.patch.object(
-        bloom, "bloom_bitmap", wraps=bloom.bloom_bitmap
-    ) as bb:
-        QUERIES["bloom_dedup_gate"](spark, sf_dir).count()
-        QUERIES["bloom_dedup_gate"](spark, sf_dir).count()
+    # a private fixture copy: a key no earlier test can have built
+    d = str(shutil.copytree(sf_dir, tmp_path / "sf"))
+    before = stats("bloom_prepared")
+    with mock.patch.object(bloom, "bloom_bitmap", wraps=bloom.bloom_bitmap) as bb:
+        QUERIES["bloom_dedup_gate"](spark, d).count()
+        QUERIES["bloom_dedup_gate"](spark, d).count()
         assert bb.call_count == 1, "bitmap must build once per session"
-        assert len(cache) == 1
+    after = stats("bloom_prepared")
+    assert (after.misses - before.misses, after.hits - before.hits) == (1, 1)

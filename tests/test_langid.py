@@ -300,13 +300,11 @@ def test_langid_oracle_matches_spark_on_null_lang_corpus(spark):
 def test_candidates_cache_distinguishes_input_columns(spark):
     """ADVICE r13: the r13 memo key normalized `_\\d+` suffixes out of ALL
     identifiers in str(bcol), so scoring `text_1` then `text_2` silently
-    reused the first column's expression. The r14 structural key must
-    keep them apart: per-column predictions must match a fresh
-    (uncached) scorer run on each column."""
-    from futures_eos_cdc_spark.operators.langid import (
-        _CANDIDATES_CACHE,
-        langid_best_expr,
-    )
+    reused the first column's expression. The structural key must keep
+    them apart: per-column predictions must match a fresh (uncached)
+    scorer run on each column."""
+    from futures_eos_cdc_spark.memo import stats
+    from futures_eos_cdc_spark.operators.langid import langid_best_expr
 
     docs = _corpus(spark)
     model = langid_model(docs)
@@ -315,20 +313,22 @@ def test_candidates_cache_distinguishes_input_columns(spark):
         F.col("text").alias("text_1"),
         F.reverse(F.col("text")).alias("text_2"),
     )
-    _CANDIDATES_CACHE.clear()
+    before = stats("langid_candidates")
     got = two.select(
         "doc_id",
         langid_best_expr(F.col("text_1"), model)["lang"].alias("p1"),
         langid_best_expr(F.col("text_2"), model)["lang"].alias("p2"),
     ).collect()
     # both columns created distinct cache entries
-    assert len(_CANDIDATES_CACHE) == 2
-    _CANDIDATES_CACHE.clear()
+    assert stats("langid_candidates").misses == before.misses + 2
+    # an equal but distinct model object misses, so this builds fresh
+    fresh_model = {k: list(v) for k, v in model.items()}
     fresh = two.select(
         "doc_id",
-        langid_best_expr(F.col("text_1"), model)["lang"].alias("p1"),
-        langid_best_expr(F.col("text_2"), model)["lang"].alias("p2"),
+        langid_best_expr(F.col("text_1"), fresh_model)["lang"].alias("p1"),
+        langid_best_expr(F.col("text_2"), fresh_model)["lang"].alias("p2"),
     ).collect()
+    assert stats("langid_candidates").misses == before.misses + 4
     assert sorted(map(tuple, got)) == sorted(map(tuple, fresh))
 
 
@@ -336,19 +336,57 @@ def test_candidates_cache_pins_model_and_misses_on_new_model(spark):
     """The cached value must hold a STRONG reference to the model dict
     (id() recycling hazard) and a retrained model (new dict) must never
     hit the old entry."""
-    from futures_eos_cdc_spark.operators.langid import (
-        _CANDIDATES_CACHE,
-        langid_best_expr,
-    )
+    from futures_eos_cdc_spark.memo import entries, stats
+    from futures_eos_cdc_spark.operators.langid import langid_best_expr
 
     docs = _corpus(spark)
     model_a = langid_model(docs)
-    _CANDIDATES_CACHE.clear()
+    before = stats("langid_candidates")
     langid_best_expr(F.col("text"), model_a)
-    assert len(_CANDIDATES_CACHE) == 1
-    (col, pinned), = list(_CANDIDATES_CACHE.values())
-    assert pinned is model_a  # strong ref lives in the value
+    assert stats("langid_candidates").misses == before.misses + 1
+    # the strong ref lives in the value
+    assert any(pinned is model_a for _col, pinned in entries("langid_candidates"))
+    langid_best_expr(F.col("text"), model_a)
+    assert stats("langid_candidates").hits == before.hits + 1
     # a structurally identical but DIFFERENT model object must miss
     model_b = {k: list(v) for k, v in model_a.items()}
     langid_best_expr(F.col("text"), model_b)
-    assert len(_CANDIDATES_CACHE) == 2
+    assert stats("langid_candidates").misses == before.misses + 2
+
+
+@pytest.mark.parametrize("ranked", [False, True])
+def test_candidates_cache_df_bound_columns_do_not_collide(spark, ranked):
+    """`df1["text"]` and `df2["text"]` print alike but resolve to
+    different DataFrames' attributes: scoring df2 after df1 with the same
+    model must not reuse df1's expression (which fails analysis with
+    MISSING_ATTRIBUTES)."""
+    from futures_eos_cdc_spark.operators.langid import (
+        langid_best_expr,
+        langid_ranked_expr,
+    )
+
+    def pred(df):
+        if ranked:
+            return langid_ranked_expr(df["text"], model)[0]["lang"]
+        return langid_best_expr(df["text"], model)["lang"]
+
+    model = langid_model(_corpus(spark))
+    df1 = _corpus(spark).select("doc_id", "text")
+    df2 = _corpus(spark).select(
+        (F.col("doc_id") + 100).alias("doc_id"), "text"
+    )
+    p1 = df1.select(pred(df1)).collect()
+    p2 = df2.select(pred(df2)).collect()
+    assert sorted(map(tuple, p1)) == sorted(map(tuple, p2))
+
+
+def test_candidates_cache_bounded_within_one_app(spark):
+    """Retraining many models in one session keeps the candidates memo at
+    or below its per-name cap instead of growing without bound."""
+    from futures_eos_cdc_spark.memo import CAP, entries
+    from futures_eos_cdc_spark.operators.langid import langid_best_expr
+
+    model = langid_model(_corpus(spark))
+    for _ in range(CAP + 3):
+        langid_best_expr(F.col("text"), {k: list(v) for k, v in model.items()})
+    assert len(entries("langid_candidates")) <= CAP

@@ -537,14 +537,17 @@ def test_exactsubstr_gram_cut_has_no_pair_join(spark, sf_dir):
     assert "ArrowEvalPython" not in plan
 
 
-def test_moore_lewis_models_broadcast_no_python(spark, sf_dir):
+def test_moore_lewis_models_broadcast_no_python(spark, sf_dir, monkeypatch):
     """Since the r13 collapse both LMs live in ONE (w1,w2)-keyed model
     table with the target slice as a conditional sum, so the corpus-sized
     scoring side sees exactly ONE broadcast model join.  The 1-row
     vocab/entropy scalar frame still plans as a single
     BroadcastNestedLoopJoin (broadcast of a 1-row frame always does in
     Spark — bounded, accepted).  Whole plan stays JVM-side, nothing
-    cartesian or quadratic."""
+    cartesian or quadratic. SPARK_GRAFT_LM_BROADCAST is read at plan
+    construction, so it is pinned to its default here: the test checks
+    the default plan whatever the ambient environment."""
+    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "1")
     plan = _plan(spark, sf_dir, "moore_lewis_selection")
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
