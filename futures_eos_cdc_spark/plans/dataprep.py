@@ -30,6 +30,7 @@ from ..operators.similarity import (
     embedding_near_dup,
 )
 from ..operators.text import with_text_stats
+from .registry import _davg, _t, query
 
 # ---------------------------------------------------------------------------
 # Exact dedup: keep-first per content hash
@@ -43,7 +44,8 @@ GROUP BY 1
 """
 
 
-def q_exact_dedup(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("exact_dedup_keep_first", EXACT_DEDUP_ORACLE)
+def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(_t(spark, sf_dir, "documents"), ["text"], "doc_id")
 
 
@@ -101,7 +103,8 @@ FROM s
 """
 
 
-def q_text_stats(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("text_stats", TEXT_STATS_ORACLE)
+def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = with_text_stats(spread(_t(spark, sf_dir, "documents")).select("doc_id", "lang", "text"))
     return d.select(
         "doc_id",
@@ -162,7 +165,8 @@ GROUP BY lang
 """
 
 
-def q_corpus_funnel(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("corpus_clean_funnel", CORPUS_FUNNEL_ORACLE)
+def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language funnel counts for the composed cleaning pipeline:
     input → quality ≥ 0.5 ∧ lang-ID agrees → content-hash unique. One scan,
     one aggregation; the dedup counts on md5 digests (16-byte shuffle)."""
@@ -222,7 +226,8 @@ WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
 """
 
 
-def q_minhash_lsh(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("minhash_lsh_near_dup", MINHASH_ORACLE)
+def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(_t(spark, sf_dir, "documents"), threshold=0.4)
 
 
@@ -278,7 +283,8 @@ WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE)
 """
 
 
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("ngram_jaccard_near_dup", NGRAM_JACCARD_ORACLE)
+def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.7)
 
 
@@ -307,7 +313,8 @@ FROM s GROUP BY 1
 """
 
 
-def q_simhash(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("simhash_buckets", SIMHASH_ORACLE)
+def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_buckets(_t(spark, sf_dir, "documents"))
 
 
@@ -333,7 +340,8 @@ WHERE p.doc_a < b.doc_id
 """
 
 
-def q_simhash_hamming(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("simhash_hamming_near_dup", SIMHASH_HAMMING_ORACLE)
+def q_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs at Hamming ≤ 1 — the bit-flip multi-index
     join (see operators/dedup.py:simhash_hamming_pairs for the 100 TB
     shape and the 64-bit Charikar-block generalization)."""
@@ -396,7 +404,8 @@ WHERE a.doc_id < b.doc_id
 """
 
 
-def q_simhash64_hamming(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("simhash64_hamming_near_dup", SIMHASH64_HAMMING_ORACLE)
+def q_simhash64_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-width SimHash near-dup: 64-bit signatures, Charikar
     4-block candidate index, exact Hamming ≤ 3 verification — the scale
     path the 16-bit variant's docstring promises (signature space 2^64, so
@@ -448,7 +457,8 @@ def _pagerank_oracle_sql() -> str:
 PAGERANK_ORACLE = _pagerank_oracle_sql()
 
 
-def q_pagerank_near_dup(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("pagerank_near_dup", PAGERANK_ORACLE)
+def q_pagerank_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the simhash64 near-dup graph — which
     documents anchor duplication clusters (the dedup-keeper prior: keep
     the most-connected representative). See operators/clustering.py:pagerank
@@ -493,7 +503,8 @@ FROM ranked WHERE rank <= 3
 """
 
 
-def q_cosine_topk(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("cosine_topk_bruteforce", COSINE_TOPK_ORACLE)
+def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(_t(spark, sf_dir, "embeddings"))
     return brute_force_topk(e, e.filter(F.col("vec_id") < 5), k=3)
 
@@ -541,7 +552,8 @@ FROM ranked WHERE rank <= 3
 """
 
 
-def q_cosine_topk_q8(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("cosine_topk_q8", COSINE_TOPK_Q8_ORACLE)
+def q_cosine_topk_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQ8 retrieval rung: exact top-k over int8-quantized vectors (see
     operators/similarity.py:brute_force_topk_q8 — scan moves 4-8x fewer
     bytes; at 100 TB the quantized table is persisted and the top-m band
@@ -618,7 +630,8 @@ FROM ranked WHERE rank <= 3
 """
 
 
-def q_cosine_topk_q8_rerank(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("cosine_topk_q8_rerank", COSINE_TOPK_Q8_RERANK_ORACLE)
+def q_cosine_topk_q8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full SQ8 ladder (r8 VERDICT missing #2 / next #3): quantized
     top-{m} band selection over the bandwidth-reduced int8 scan, then
     exact full-precision re-rank of only the band rows to top-k (see
@@ -634,13 +647,8 @@ def q_cosine_topk_q8_rerank(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Rows-only (engine-specific) queries: ANN, embedding near-dup, multimodal
+# The trained IVF model ann_cosine_ivf and embedding_kmeans_clusters share
 # ---------------------------------------------------------------------------
-def q_ann_lsh(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
-    e = spread(_t(spark, sf_dir, "embeddings"))
-    return ann_topk_lsh(e, e.filter(F.col("vec_id") < 5), k=3)
-
-
 def embeddings_auto_n_cells(sf_dir: str) -> int:
     """Corpus-derived k-means cell count for the shared trained model
     (r6 VERDICT item 5): cells = auto_n_cells(row count of
@@ -677,31 +685,6 @@ def _trained_centroids(spark: SparkSession, sf_dir: str, e: DataFrame) -> list[l
     )
 
 
-def q_ann_ivf(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
-    e = spread(_t(spark, sf_dir, "embeddings"))
-    return ann_topk_ivf(
-        e,
-        e.filter(F.col("vec_id") < 5),
-        k=3,
-        centroids=_trained_centroids(spark, sf_dir, e),
-    )
-
-
-def q_embedding_near_dup(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
-    # The fixture has no true duplicates (max pairwise cosine ≈ 0.48), so the
-    # demo threshold is 0.3 — high-similarity pairs, same machinery. At this
-    # low threshold the collision probability per bit is only ~0.6, so the
-    # demo uses short tables and more of them (12 x 4 bits → recall ~0.8);
-    # production near-dup (cosine ≥ 0.9, p ≥ 0.85) keeps the 8 x 8 default
-    # with recall ~0.95 and exponentially smaller buckets.
-    return embedding_near_dup(
-        spread(_t(spark, sf_dir, "embeddings")),
-        threshold=0.3,
-        n_tables=12,
-        bits_per_table=4,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Benchmark contamination check: n-gram collision against an eval set —
 # the decontamination pass every serious pretraining pipeline runs (cf.
@@ -730,7 +713,8 @@ GROUP BY c.doc_id
 """
 
 
-def q_benchmark_contamination(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("benchmark_contamination", CONTAMINATION_ORACLE)
+def q_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus docs sharing ≥1 {k}-token n-gram with the eval slice, with the
     distinct-overlapping-gram count per document (drop or flag these before
     training; the count grades severity).
@@ -843,7 +827,8 @@ SELECT * FROM aud_feats
 """
 
 
-def q_multimodal_features(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("multimodal_features", MULTIMODAL_ORACLE)
+def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import synth_and_decode_features
 
     docs = spread(_t(spark, sf_dir, "documents"))
@@ -869,15 +854,14 @@ GROUP BY 1, 2
 """
 
 
-def q_train_val_test_split(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("train_val_test_split", SPLIT_ORACLE)
+def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-stable 80/10/10 split over documents, summarized per
     (split, lang). The assignment is one md5 projection — no shuffle, no
     state, append-safe at 100 TB (new files never re-deal old rows); the
     single exchange is the 2-key summary aggregate. The oracle reruns the
     identical CASE over md5, so assignment parity is hash-checked row by
     row (not just proportions)."""
-    from .registry import _davg
-
     docs = hash_split(spread(_t(spark, sf_dir, "documents")), "doc_id", _SPLIT_WEIGHTS)
     return docs.groupBy("split", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -902,7 +886,8 @@ FROM h WHERE rn = 1
 """
 
 
-def q_dedup_keep_rows(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("dedup_keep_rows", DEDUP_KEEP_ROWS_ORACLE)
+def q_dedup_keep_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The surviving row (lowest doc_id) per distinct text, with duplicate
     count — the one-join/one-window convenience VERDICT r4 asked for so
     users stop re-deriving it from ``exact_dedup``'s digest map. One hash
@@ -947,7 +932,8 @@ FROM flagged GROUP BY doc_id
 """
 
 
-def q_line_dedup(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("line_dedup_docs", LINE_DEDUP_ORACLE)
+def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line-level exact dedup across the corpus (CCNet/RefinedWeb): every
     occurrence of a line after the corpus-wide first (order = doc_id,
     line_idx) is dropped, and each doc reports how much of it survived plus
@@ -1018,7 +1004,8 @@ HAVING count(*) + {SPAN_K - 1} >= {SPAN_MIN_LEN}
 """
 
 
-def q_duplicate_spans(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("duplicate_text_spans", DUP_SPANS_ORACLE)
+def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicated passages ≥ {SPAN_MIN_LEN} tokens — the
     exact-substring dedup signal (the published big-ticket sub-document
     dedup) via the gram-diagonal formulation: see
@@ -1063,7 +1050,8 @@ FROM s
 """
 
 
-def q_global_shuffle_shards(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("global_shuffle_shards", GLOBAL_SHUFFLE_ORACLE)
+def q_global_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-stable global shuffle into {_N_SHARDS} training shards:
     (shard_id, pos_in_shard) per document, reproducible across runs and
     engines (md5-derived, no rand()). One exchange on shard_id + a
@@ -1102,7 +1090,8 @@ FROM part
 ZORDER_ORACLE = _zorder_oracle_sql()
 
 
-def q_zorder_layout_key(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("zorder_layout_key", ZORDER_ORACLE)
+def q_zorder_layout_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (z-order) layout key per part row: price and size bucketized
     onto 8-bit grids, bits interleaved — the multi-column clustering key a
     lakehouse OPTIMIZE ZORDER writes by, exposed as a projection so any
@@ -1148,7 +1137,8 @@ FROM joined GROUP BY doc_id
 """
 
 
-def q_corpus_token_stats(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("corpus_token_stats", CORPUS_TOKEN_STATS_ORACLE)
+def q_corpus_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-RELATIVE quality signal per document: how rare are its tokens
     across the whole corpus (document frequency), summarized as rare-token
     count/ratio and df min/avg/max. Unlike ``text_stats`` (pure per-doc
@@ -1212,7 +1202,8 @@ FROM cand WHERE rn = 1
 """
 
 
-def q_dedup_incremental(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("dedup_incremental_batch", DEDUP_INCREMENTAL_ORACLE)
+def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-crawl ingestion dedup: batch rows (sources src15-19) that are
     not already in the corpus (the other sources), first-occurrence-only
     within the batch. The corpus collapses to distinct digests before the
@@ -1276,7 +1267,8 @@ WHERE d.source IN {_BATCH_SOURCES}
 """
 
 
-def q_neardup_incremental(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("neardup_incremental_batch", NEARDUP_INCREMENTAL_ORACLE)
+def q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The daily-crawl near-dup admission gate: batch docs (the 5 batch
     sources) surviving only if NO corpus doc is an LSH-candidate with exact
     jaccard ≥ {_NEARDUP_INC_T} — dedup_incremental_batch's semantics lifted
@@ -1328,7 +1320,8 @@ WHERE d.doc_id % 17 <> 0
 """
 
 
-def q_decontaminate(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("decontaminate_docs", DECONTAMINATE_ORACLE)
+def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The clean training corpus: non-eval docs with ZERO {CONTAM_K}-gram
     overlap against the eval slice — benchmark_contamination *reports*
     severity; this query *enforces* the drop. Same broadcast shape (eval
@@ -1414,7 +1407,8 @@ FROM scored GROUP BY doc_id
 """
 
 
-def q_doc_perplexity(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("doc_perplexity_scores", PERPLEXITY_ORACLE)
+def q_doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document bigram-LM perplexity (as mean negative log-prob) under an
     add-k-smoothed model trained on the corpus itself — the quality-filter
     signal CCNet-style pipelines threshold on (high avg_neg_logprob ⇒
@@ -1607,7 +1601,8 @@ def _ml_lm_frame(bg: DataFrame, toks: DataFrame, train_cond, h_col: str) -> Data
     )
 
 
-def q_moore_lewis_selection(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("moore_lewis_selection", MOORE_LEWIS_ORACLE)
+def q_moore_lewis_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moore-Lewis data selection over the corpus: per document, the
     cross-entropy under the TARGET LM (trained on the '{_ML_TARGET_LANG}'
     slice) and the GENERAL LM (trained on everything), their difference
@@ -1772,7 +1767,8 @@ FROM ranked WHERE rank <= {BM25_TOPK}
 """
 
 
-def q_bm25_topk(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("bm25_topk_retrieval", BM25_ORACLE)
+def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-{BM25_TOPK} documents per query — lexical retrieval, the
     text-side complement of the ANN embedding searches (and the retrieval
     scorer RAG / eval-set mining pipelines run at corpus scale).
@@ -1792,7 +1788,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     The corpus statistics (tf/df/lens/stats) come from the session's
     train-once :func:`_retrieval_bm25` (r12 VERDICT next #1) — built on
     first retrieval-family call, reused by hybrid/hard-negative mining."""
-    model = _retrieval_bm25(spark, sf_dir, _t)
+    model = _retrieval_bm25(spark, sf_dir)
     qt = spark.createDataFrame(
         [(qid, t) for qid, s in BM25_QUERIES for t in s.split()],
         "query_id long, term string",
@@ -1880,7 +1876,7 @@ def _bm25_scores(
 # session running only q_bm25_topk never pays the corpus-wide cosine scan
 # or the mlt_lex window pass.
 # ---------------------------------------------------------------------------
-def _retrieval_bm25(spark: SparkSession, sf_dir: str, _t) -> dict:
+def _retrieval_bm25(spark: SparkSession, sf_dir: str) -> dict:
     """The BM25 corpus statistics shared by q_bm25_topk, q_hybrid_rrf and
     q_hard_negatives: tf (doc,term,tf), df_all (term,df), lens (doc,len)
     — each ``localCheckpoint``-ed (MEMORY_AND_DISK, lineage truncated so
@@ -1920,9 +1916,7 @@ def _retrieval_bm25(spark: SparkSession, sf_dir: str, _t) -> dict:
     return memo(spark, fixture_spec("retrieval_bm25", sf_dir, "documents"), build)
 
 
-def _retrieval_cand(
-    spark: SparkSession, sf_dir: str, _t
-) -> tuple[DataFrame, DataFrame]:
+def _retrieval_cand(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The two fixed-query candidate lists shared by q_hybrid_rrf and
     q_hard_negatives, as ``(mlt_lex, sem)``: the more-like-this lexical
     top-HYBRID_DEPTH list for the fixture query docs (ids < 5; query_id,
@@ -1947,7 +1941,7 @@ def _retrieval_cand(
             .distinct()
         )
         lagg = _bm25_scores(
-            docs, toks_q, model=_retrieval_bm25(spark, sf_dir, _t)
+            docs, toks_q, model=_retrieval_bm25(spark, sf_dir)
         ).filter(F.col("doc_id") != F.col("query_id"))
         wl = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
@@ -2004,7 +1998,8 @@ FROM ranked WHERE rank <= 3
 TFIDF_BROADCAST_MAX_INPUT_BYTES = 256 << 20
 
 
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("tfidf_top_terms", TFIDF_ORACLE)
+def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document top-3 TF-IDF terms — the corpus-statistics shape every
     training pipeline computes. Three aggregates (tf per doc-term, df per
     term, N), a size-GATED join of the term-df table, and a
@@ -2077,7 +2072,8 @@ FROM cc GROUP BY id
 """
 
 
-def q_dedup_clusters(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("dedup_clusters", CLUSTERS_ORACLE)
+def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs → clusters: alternating large-/small-star connected components
     over the MinHash near-dup pairs; component = min member doc_id (the
     keep-doc). Each round is two ids-only hash aggregations + a
@@ -2131,7 +2127,8 @@ FROM (SELECT * FROM clustered UNION ALL SELECT * FROM singles)
 """
 
 
-def q_dedup_canonical(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("dedup_canonical_docs", CANONICAL_DOCS_ORACLE)
+def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The step a cleaning pipeline runs AFTER clustering: pick ONE
     canonical document per near-dup cluster (highest n_chars, tie min
     doc_id — "keep the longest variant") and pass singletons through as
@@ -2222,7 +2219,8 @@ FROM ws LEFT JOIN bs ON ws.doc_id = bs.b_doc_id
 """
 
 
-def q_repetition_stats(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("doc_repetition_stats", REPETITION_STATS_ORACLE)
+def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repetition signals, the Gopher-rule family of quality
     filters for LLM training corpora (Rae et al. 2021 §A1.1: drop documents
     whose top word / duplicate-word / top-n-gram fractions are extreme).
@@ -2329,7 +2327,8 @@ FROM scrubbed
 """
 
 
-def q_pii_scrub(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("pii_scrub", PII_SCRUB_ORACLE)
+def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-corpus PII/URL scrubbing pass: emails → <EMAIL>, URLs →
     <URL>, IPv4 → <IP>, applied in that order as JVM ``regexp_replace``
     expressions (single codegen'd projection — no shuffle, no Python).
@@ -2440,6 +2439,12 @@ FROM ranked WHERE rank <= {k}
 
 
 ANN_LSH_ORACLE = _ann_lsh_oracle_sql()
+
+
+@query("ann_cosine_lsh", ANN_LSH_ORACLE)
+def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = spread(_t(spark, sf_dir, "embeddings"))
+    return ann_topk_lsh(e, e.filter(F.col("vec_id") < 5), k=3)
 
 
 def _ann_ivf_oracle_sql(
@@ -2579,6 +2584,17 @@ FROM ranked WHERE rank <= {k}
 
 
 ANN_IVF_ORACLE = _ann_ivf_oracle_sql()
+
+
+@query("ann_cosine_ivf", ANN_IVF_ORACLE)
+def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = spread(_t(spark, sf_dir, "embeddings"))
+    return ann_topk_ivf(
+        e,
+        e.filter(F.col("vec_id") < 5),
+        k=3,
+        centroids=_trained_centroids(spark, sf_dir, e),
+    )
 
 # ---------------------------------------------------------------------------
 # IVF-PQ (Jégou 2011) — the quantization ladder's next rung after SQ8.
@@ -2780,7 +2796,8 @@ def _trained_pq(spark: SparkSession, sf_dir: str, e: DataFrame):
     return memo(spark, fixture_spec("pq_model", sf_dir, "embeddings"), build)
 
 
-def q_ann_ivf_pq(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("ann_cosine_ivf_pq", ANN_IVF_PQ_ORACLE)
+def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ cosine top-3 for the fixture queries (ids < 5): coarse probe
     over the SHARED trained IVF centroids (same index as ann_cosine_ivf),
     ADC against 8-subspace/32-code PQ reconstructions, top-{band} band,
@@ -2840,7 +2857,8 @@ FROM sized
 KMEANS_CLUSTERS_ORACLE = _kmeans_oracle_sql()
 
 
-def q_kmeans_clusters(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("embedding_kmeans_clusters", KMEANS_CLUSTERS_ORACLE)
+def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means cluster membership per embedding (the IVF index's trained
     cells, reused for curation) with cluster size and a content-stable
     balanced-sample rank: ``kept`` caps every cluster at {cap} members, so
@@ -2916,7 +2934,8 @@ FROM sized
 PROTOTYPE_PRUNING_ORACLE = _prototype_prune_oracle_sql()
 
 
-def q_prototype_pruning(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("prototype_pruning", PROTOTYPE_PRUNING_ORACLE)
+def q_prototype_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SSL-prototype data pruning (Sorscher et al. 2022) over the corpus
     embeddings: every vector is ranked within its k-means cluster by
     distance to the cluster prototype (hardest first) and the easy,
@@ -3026,6 +3045,22 @@ FROM scored WHERE cosine >= {threshold!r}::DOUBLE
 EMBEDDING_NEAR_DUP_ORACLE = _embedding_near_dup_oracle_sql()
 
 
+@query("embedding_near_dup", EMBEDDING_NEAR_DUP_ORACLE)
+def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The fixture has no true duplicates (max pairwise cosine ≈ 0.48), so the
+    # demo threshold is 0.3 — high-similarity pairs, same machinery. At this
+    # low threshold the collision probability per bit is only ~0.6, so the
+    # demo uses short tables and more of them (12 x 4 bits → recall ~0.8);
+    # production near-dup (cosine ≥ 0.9, p ≥ 0.85) keeps the 8 x 8 default
+    # with recall ~0.95 and exponentially smaller buckets.
+    return embedding_near_dup(
+        spread(_t(spark, sf_dir, "embeddings")),
+        threshold=0.3,
+        n_tables=12,
+        bits_per_table=4,
+    )
+
+
 # ---------------------------------------------------------------------------
 # Sliding-window document chunking (embedding / training prep)
 # ---------------------------------------------------------------------------
@@ -3049,7 +3084,8 @@ FROM chunks
 """
 
 
-def q_doc_chunks(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("doc_chunks", DOC_CHUNKS_ORACLE)
+def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window chunking: split each document into {size}-token
     windows every {stride} tokens (8-token overlap) — the standard prep
     step before embedding or packing training sequences. Emits the chunk
@@ -3132,7 +3168,8 @@ FROM seg WHERE n_tokens > l0
 """
 
 
-def q_token_block_segments(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("token_block_segments", TOKEN_BLOCK_SEGMENTS_ORACLE)
+def q_token_block_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attention-boundary metadata for the packed blocks: each chunk's span
     [stream_offset, stream_offset+n) split at {budget}-token block edges
     into 1-2 (block_id, start_in_block, seg_tokens) segments — exactly the
@@ -3145,7 +3182,7 @@ def q_token_block_segments(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     arithmetic end-to-end; the oracle applies the same split to the
     token_blocks oracle CTE."""
     B = PACK_BUDGET
-    tb = q_token_blocks(spark, sf_dir, _t)
+    tb = q_token_blocks(spark, sf_dir)
     off, n = F.col("stream_offset"), F.col("n_tokens")
     b0 = F.expr(f"stream_offset div {B}")
     s0 = off % B
@@ -3178,7 +3215,8 @@ def q_token_block_segments(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
 PACK_SHARD_DOCS = 64  # docs per packing shard — bounds any one task's sort
 
 
-def q_token_blocks(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("token_blocks", TOKEN_BLOCKS_ORACLE)
+def q_token_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack the chunk stream into fixed {budget}-token training blocks the
     way GPT-style pretraining does: concatenate chunks in a deterministic
     per-language order and slice at token-offset boundaries (block_id =
@@ -3325,7 +3363,8 @@ WHERE {_mix_keep_sql()}
 """
 
 
-def q_mixture_resample(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("mixture_resample", MIXTURE_RESAMPLE_ORACLE)
+def q_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus mixture control: resample each language at its target
     fraction (en 1.0 / de 0.5 / es 0.25 / fr 0.125) with the content-stable
     md5-bucket rule — deterministic, append-safe, and exactly reproducible
@@ -3371,7 +3410,8 @@ FROM agg
 """
 
 
-def q_quality_classifier(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("quality_classifier_scores", QUALITY_CLASSIFIER_ORACLE)
+def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality gating at corpus scale: score every document
     with a hashed linear classifier (operators/text.py:
     hashed_classifier_logit_expr) and emit the keep decision. The whole
@@ -3489,7 +3529,8 @@ FROM dsized
 D4_SELECTION_ORACLE = _d4_oracle_sql()
 
 
-def q_d4_selection(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("d4_selection", D4_SELECTION_ORACLE)
+def q_d4_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The D4 pipeline (Tirumala et al. 2023): SemDeDup drops
     near-duplicate embeddings within each k-means cell, then
     SSL-prototype pruning keeps the hardest 70% of the SURVIVORS per
@@ -3568,7 +3609,8 @@ IVF_FAMILY_ORACLE_BUILDERS = {
 }
 
 
-def q_semantic_dedup(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("semantic_dedup_embeddings", SEMANTIC_DEDUP_ORACLE)
+def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup pass over the corpus embeddings (operators/similarity.py:
     semantic_dedup): k-means cells from the SHARED trained centroids (the
     same train-once model ann_cosine_ivf and embedding_kmeans_clusters
@@ -3626,7 +3668,8 @@ FROM d JOIN r USING (source) JOIN h USING (doc_id)
 """
 
 
-def q_token_budget_mixture(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("token_budget_mixture", TOKEN_BUDGET_MIXTURE_ORACLE)
+def q_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data mixing under a token budget (operators/sampling.py:
     token_budget_rates + token_budget_sample): target weights say what
     fraction of the training tokens each source should contribute
@@ -3707,7 +3750,8 @@ FROM d JOIN r USING (lang) JOIN h USING (doc_id)
 """
 
 
-def q_temperature_mixture(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("temperature_mixture_sample", TEMPERATURE_MIXTURE_ORACLE)
+def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled language rebalancing (operators/sampling.py:
     temperature_mixture_rates — the mT5/XLM-R alpha-sampling rule,
     tau=0.5 over a budget of 60% of the corpus tokens): each language's
@@ -3763,7 +3807,8 @@ WHERE levenshtein(a.s, b.s) BETWEEN 1 AND 2
 """
 
 
-def q_fuzzy_part_names(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("fuzzy_join_part_names", FUZZY_PART_NAMES_ORACLE)
+def q_fuzzy_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate record linkage (operators/linkage.py): all part-name
     pairs within edit distance 2, found via FastSS deletion-neighborhood
     blocking — distinct-value collapse, C(len,2) deletion-variant keys,
@@ -3793,7 +3838,8 @@ WHERE length(a.text) >= 31 AND strpos(b.text, a.text) > 0
 """
 
 
-def q_doc_containment(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("doc_containment_dedup", DOC_CONTAINMENT_ORACLE)
+def q_doc_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment dedup (operators/dedup.py: contained_docs): docs whose
     full text appears verbatim inside a strictly longer doc, blocked by
     aligned 16-char grams (container side linear, n probes per containee)
@@ -3823,7 +3869,8 @@ FROM r WHERE src_rank <= 10
 """
 
 
-def q_domain_cap_sample(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("domain_cap_sample", DOMAIN_CAP_ORACLE)
+def q_domain_cap_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-cap curation (operators/sampling.py: cap_per_group): at most
     10 docs per source, selected by content-stable hash rank so the pick
     is deterministic and append-stable. One exchange on source; the
@@ -3867,7 +3914,8 @@ FROM r
 """
 
 
-def q_leakage_safe_split(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("leakage_safe_split", LEAKAGE_SAFE_SPLIT_ORACLE)
+def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test assignment that cannot leak near-duplicates across
     splits: hash_split keyed by the near-dup CLUSTER representative (the
     connected component's min doc_id; singletons are their own group), so
@@ -3928,7 +3976,8 @@ FROM arrs a LEFT JOIN agg g USING (doc_id)
 """
 
 
-def q_duplicate_span_removal(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("duplicate_span_removal", SPAN_REMOVAL_ORACLE)
+def q_duplicate_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr end-to-end: detect cross-document duplicated passages
     (gram diagonals, q_duplicate_spans' exact parameters) and CUT them from
     the higher-id doc, keeping one occurrence corpus-wide — the action the
@@ -3996,7 +4045,8 @@ FROM arrs a LEFT JOIN agg g USING (doc_id)
 """
 
 
-def q_exactsubstr_gram_cut(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("exactsubstr_gram_cut", GRAM_CUT_ORACLE)
+def q_exactsubstr_gram_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr dedup via duplicated-k-gram COVERAGE (k =
     {SPAN_MIN_LEN}): cut every token covered by a k-gram occurrence that
     is not the corpus-wide first — the linear-scaling twin of
@@ -4041,7 +4091,8 @@ WHERE d.source IN {_BATCH_SOURCES}
 """
 
 
-def q_containment_incremental(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("containment_incremental_batch", CONTAINMENT_INCREMENTAL_ORACLE)
+def q_containment_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-crawl containment gate: batch docs (sources src15-19) admitted
     only if their full text is NOT a verbatim substring of some longer
     corpus doc (operators/dedup.py: contained_in_corpus) — the fragment-
@@ -4104,7 +4155,8 @@ FROM p JOIN b ON b.doc_id = p.doc_id
 """
 
 
-def q_quality_weighted_sample(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("quality_weighted_sample", QUALITY_WEIGHTED_SAMPLE_ORACLE)
+def q_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-WEIGHTED sampling (the soft form of the hard quality gate):
     every document keeps with probability given by its classifier score —
     high-quality docs nearly always survive, borderline docs survive at a
@@ -4334,7 +4386,8 @@ BPE_TOKEN_BLOCKS_ORACLE = _bpe_oracle_sql(tail="blocks")
 BPE_SUBWORD_VOCAB_ORACLE = _bpe_oracle_sql(tail="subwords")
 
 
-def q_bpe_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("bpe_vocab", BPE_VOCAB_ORACLE)
+def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned BPE merge table (rank, lhs, rhs, pair_freq): seeded by
     nothing but the data — max frequency-weighted pair count per step,
     lexicographic tie-break — so the oracle re-learns the identical table
@@ -4350,7 +4403,8 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     )
 
 
-def q_bpe_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("bpe_token_counts", BPE_TOKEN_COUNTS_ORACLE)
+def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT subword token counts per document under the trained BPE vocab
     (vs corpus_token_stats/token_blocks' whitespace counts — the 1.3-2x
     budget-estimate gap r7's verdict called out). Apply is a pure
@@ -4365,7 +4419,8 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
 BPE_TOKEN_COUNTS_BYTES_ORACLE = _bpe_oracle_sql(tail="counts", byte_level=True)
 
 
-def q_bpe_token_counts_bytes(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("bpe_token_counts_bytes", BPE_TOKEN_COUNTS_BYTES_ORACLE)
+def q_bpe_token_counts_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT token counts per document under a BYTE-level BPE vocabulary
     (the GPT-2/tiktoken shape — r12 VERDICT next #5): the initial
     alphabet is the 256 UTF-8 byte values via the published
@@ -4386,7 +4441,8 @@ def q_bpe_token_counts_bytes(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     return doc_bpe_token_counts_bytes(docs, merges)
 
 
-def q_bpe_subword_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("bpe_subword_vocab", BPE_SUBWORD_VOCAB_ORACLE)
+def q_bpe_subword_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SUBWORD vocabulary the trained tokenizer induces on the corpus:
     per token, total corpus occurrences (word-frequency-weighted) and the
     number of distinct words it appears in — the table a tokenizer report
@@ -4579,7 +4635,8 @@ GROUP BY doc_id
 )
 
 
-def q_bpe_token_counts_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("bpe_token_counts_v1k", BPE_TOKEN_COUNTS_V1K_ORACLE)
+def q_bpe_token_counts_v1k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT BPE token counts at a PRODUCTION-shaped merge cap
     (n_merges={n} — r8 VERDICT next #1): the replace-chain projection
     tops out at a few hundred nested JVM replaces (plan/codegen limits),
@@ -4607,14 +4664,14 @@ def q_bpe_token_counts_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     there the oracle replays training too, so THAT comparison is
     symmetric the other way.)
     """
-    docs, merges = _v1k_merges(spark, sf_dir, _t)
+    docs, merges = _v1k_merges(spark, sf_dir)
     return doc_bpe_token_counts_joined(docs, merges)
 
 
 _BPE_V1K_FILE_SF: dict = {}
 
 
-def _v1k_merges(spark: SparkSession, sf_dir: str, _t):
+def _v1k_merges(spark: SparkSession, sf_dir: str):
     """Train-once + persist-for-the-oracle, shared by EVERY v1k entry
     point (code-review r9: the file-SF guard lived only in the counts
     query, so a session alternating fixtures could leave the persisted
@@ -4682,7 +4739,8 @@ FROM off
 BPE_TOKEN_BLOCKS_V1K_ORACLE = _bpe_v1k_blocks_oracle()
 
 
-def q_bpe_token_blocks_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("bpe_token_blocks_v1k", BPE_TOKEN_BLOCKS_V1K_ORACLE)
+def q_bpe_token_blocks_v1k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """token_blocks packed with PRODUCTION-vocab BPE counts: the
     {n}-merge-cap tokenizer (join-based apply, corpus-side cost
     n_merges-independent) feeding the same sharded distributed prefix
@@ -4690,7 +4748,7 @@ def q_bpe_token_blocks_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     r8 VERDICT's "every token-denominated operator budgets through this"
     observation asks for. Oracle replays apply from the persisted merge
     table (recursive CTE) and the prefix sum over (lang, doc_id)."""
-    docs, merges = _v1k_merges(spark, sf_dir, _t)
+    docs, merges = _v1k_merges(spark, sf_dir)
     counts = doc_bpe_token_counts_joined(docs, merges, keep_cols=("lang",))
     return _pack_token_blocks(counts)
 
@@ -4717,7 +4775,8 @@ GROUP BY token
 )
 
 
-def q_bpe_subword_vocab_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("bpe_subword_vocab_v1k", BPE_SUBWORD_VOCAB_V1K_ORACLE)
+def q_bpe_subword_vocab_v1k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The subword vocabulary the PRODUCTION-cap tokenizer induces on the
     corpus (per-token corpus occurrence mass + distinct-word spread —
     the OOV/fertility audit at the {n}-merge cap). Token lists come from
@@ -4727,7 +4786,7 @@ def q_bpe_subword_vocab_v1k(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     table and unnests the same symbol strings."""
     from ..operators.bpe import _clean_words, bpe_word_tokens
 
-    docs, merges = _v1k_merges(spark, sf_dir, _t)
+    docs, merges = _v1k_merges(spark, sf_dir)
     words = docs.filter(F.col("text").isNotNull()).select(
         F.explode(_clean_words(F.col("text"))).alias("word")
     )
@@ -4749,7 +4808,8 @@ q_bpe_subword_vocab_v1k.__doc__ = q_bpe_subword_vocab_v1k.__doc__.format(
 )
 
 
-def q_bpe_token_blocks(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("bpe_token_blocks", BPE_TOKEN_BLOCKS_ORACLE)
+def q_bpe_token_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """token_blocks re-based on EXACT BPE counts (r7 VERDICT #1's "re-base
     at least one token-denominated query"): pack documents into fixed
     {budget}-token training blocks by prefix sum over (lang, doc_id) order
@@ -5010,7 +5070,8 @@ def hybrid_rrf_frame(
     )
 
 
-def q_hybrid_rrf(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("hybrid_rrf_retrieval", HYBRID_RRF_ORACLE)
+def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval: BM25 (lexical, the query doc's distinct terms —
     the "more-like-this" shape) and exact cosine (semantic, the query
     doc's embedding) each produce a top-{HYBRID_DEPTH} list per query doc
@@ -5032,7 +5093,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     session's train-once :func:`_retrieval_cand` (r12 VERDICT next #1);
     the frames are the same by construction, so rows never change.
     """
-    mlt_lex, sem = _retrieval_cand(spark, sf_dir, _t)
+    mlt_lex, sem = _retrieval_cand(spark, sf_dir)
     return hybrid_rrf_frame(None, None, prebuilt_lex=mlt_lex, prebuilt_sem=sem)
 
 
@@ -5086,7 +5147,8 @@ SELECT doc_id, lang, w, skey, CAST(rank AS BIGINT) AS rank FROM (
 """
 
 
-def q_dsir_sample(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("dsir_importance_sample", DSIR_SAMPLE_ORACLE)
+def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR data selection (Xie et al. 2023): importance-resample the
     non-English documents toward the English target distribution over
     {DSIR_N_BUCKETS} hashed unigram+bigram buckets, Gumbel-top-{DSIR_SAMPLE_K}
@@ -5150,7 +5212,8 @@ FROM verdict v LEFT JOIN exact e ON v.doc_id = e.doc_id
 """
 
 
-def q_bloom_gate(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("bloom_dedup_gate", BLOOM_GATE_ORACLE)
+def q_bloom_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter admission gate: even doc_ids are the already-admitted
     reference corpus; the probing batch (doc_id % 3 = 0) OVERLAPS it —
     the replayed-shard re-ingest every long-running pipeline sees, so the
@@ -5256,7 +5319,8 @@ WHERE NOT EXISTS (
 """
 
 
-def q_hard_negatives(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("hard_negative_mining", HARD_NEG_ORACLE)
+def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for embedding-model training (DPR/contrastive
     practice, Karpukhin et al. 2020): per query doc (ids < 5), the
     lexical (BM25) top-{HYBRID_DEPTH} candidates that the semantic
@@ -5273,7 +5337,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     Both candidate lists are the session-cached train-once frames from
     :func:`_retrieval_cand` — byte-identical to the sub-frames this query
     used to rebuild inline (r12 VERDICT next #1)."""
-    lex, sem = _retrieval_cand(spark, sf_dir, _t)
+    lex, sem = _retrieval_cand(spark, sf_dir)
     sem = sem.select(F.col("q_id").alias("query_id"), F.col("c_id").alias("doc_id"))
     # the excluded set is queries × HYBRID_DEPTH rows — broadcast the
     # anti-join side (same rationale as the hybrid fusion broadcasts)
@@ -5314,7 +5378,8 @@ FROM scored GROUP BY vec_id
 """
 
 
-def q_semantic_decontamination(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("semantic_decontamination", SEM_DECON_ORACLE)
+def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space decontamination: the n-gram decontaminate_docs
     twin for PARAPHRASED leakage — drop training vectors whose max cosine
     against any eval vector (ids < 5) reaches {SEM_DECON_TAU} (chosen at
@@ -5497,7 +5562,7 @@ def _word_freqs(docs: DataFrame) -> list[tuple[str, int]]:
 _UNIGRAM_FILE_SF: dict = {}
 
 
-def _unigram_pieces(spark: SparkSession, sf_dir: str, _t):
+def _unigram_pieces(spark: SparkSession, sf_dir: str):
     """Train-once + persist-for-the-oracle, the _v1k_merges twin shared
     by every unigram entry point: after this call the persisted piece
     table always matches ``sf_dir``. Returns (docs, pieces)."""
@@ -5603,7 +5668,8 @@ FROM read_parquet('{UNIGRAM_PIECES_PATH}/*.parquet')
 """
 
 
-def q_unigram_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("unigram_token_counts", UNIGRAM_TOKEN_COUNTS_ORACLE)
+def q_unigram_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT unigram-LM token counts per document ({UNIGRAM_VOCAB_SIZE}-piece
     SentencePiece-style vocabulary, hard-EM trained — operators/unigram.py):
     the second production subword algorithm next to BPE, same join-based
@@ -5613,19 +5679,20 @@ def q_unigram_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     eagerly; the oracle REPLAYS Viterbi from it as a recursive CTE with
     the identical ascending-length strict-improvement tie rule, so every
     segmentation is bit-checked, not just the counts' plumbing."""
-    docs, pieces = _unigram_pieces(spark, sf_dir, _t)
+    docs, pieces = _unigram_pieces(spark, sf_dir)
     from ..operators.unigram import doc_unigram_token_counts
 
     return doc_unigram_token_counts(docs, pieces)
 
 
-def q_unigram_subword_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("unigram_subword_vocab", UNIGRAM_SUBWORD_VOCAB_ORACLE)
+def q_unigram_subword_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-piece corpus audit for the unigram tokenizer (the
     bpe_subword_vocab twin): total corpus occurrences + distinct words
     using each piece — the OOV/fertility table a tokenizer rollout
     reviews. Same plan as the counts query with the (word, toks) table
     exploded once; the oracle replays the full Viterbi segmentation."""
-    docs, pieces = _unigram_pieces(spark, sf_dir, _t)
+    docs, pieces = _unigram_pieces(spark, sf_dir)
     from ..operators.text import tokens_expr
     from ..operators.unigram import unigram_word_tokens
 
@@ -5649,13 +5716,14 @@ def q_unigram_subword_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     )
 
 
-def q_unigram_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("unigram_vocab", UNIGRAM_VOCAB_ORACLE)
+def q_unigram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained unigram piece table itself (piece, 6dp logp). Both
     sides read the persisted artifact — a shared-artifact check (the
     training algorithm is pinned by tests/test_unigram.py's hand-trace
     and invariants; EM cannot realistically be replayed in SQL the way
     the 40-merge BPE training is)."""
-    _unigram_pieces(spark, sf_dir, _t)  # train + persist for THIS sf_dir
+    _unigram_pieces(spark, sf_dir)  # train + persist for THIS sf_dir
     return spark.read.parquet(UNIGRAM_PIECES_PATH).select("piece", "logp")
 
 
@@ -5731,7 +5799,7 @@ def _ensure_wordpiece_table() -> None:
 _WORDPIECE_FILE_SF: dict = {}
 
 
-def _wordpiece_model(spark: SparkSession, sf_dir: str, _t):
+def _wordpiece_model(spark: SparkSession, sf_dir: str):
     """Train-once + persist-for-the-oracle, the _unigram_pieces twin
     shared by every WordPiece entry point: after this call the persisted
     vocabulary always matches ``sf_dir``. Returns (docs, vocab)."""
@@ -5840,7 +5908,8 @@ FROM read_parquet('{WORDPIECE_VOCAB_PATH}/*.parquet')
 """
 
 
-def q_wordpiece_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("wordpiece_token_counts", WORDPIECE_TOKEN_COUNTS_ORACLE)
+def q_wordpiece_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT WordPiece token counts per document ({WORDPIECE_VOCAB_SIZE}-piece
     BERT-style vocabulary, likelihood-merge trained —
     operators/wordpiece.py): the third production subword algorithm,
@@ -5854,7 +5923,7 @@ def q_wordpiece_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     plumbing."""
     from ..operators.wordpiece import doc_wordpiece_token_counts
 
-    docs, vocab = _wordpiece_model(spark, sf_dir, _t)
+    docs, vocab = _wordpiece_model(spark, sf_dir)
     return doc_wordpiece_token_counts(docs, vocab).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "n_words",
@@ -5863,9 +5932,8 @@ def q_wordpiece_token_counts(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     )
 
 
-def q_wordpiece_subword_vocab(
-    spark: SparkSession, sf_dir: str, _t
-) -> DataFrame:
+@query("wordpiece_subword_vocab", WORDPIECE_SUBWORD_VOCAB_ORACLE)
+def q_wordpiece_subword_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-piece corpus audit for the WordPiece tokenizer (the
     bpe/unigram_subword_vocab triplet-completer): total corpus
     occurrences + distinct words using each piece — the OOV/fertility
@@ -5875,7 +5943,7 @@ def q_wordpiece_subword_vocab(
     from ..operators.text import tokens_expr
     from ..operators.wordpiece import wordpiece_word_tokens
 
-    docs, vocab = _wordpiece_model(spark, sf_dir, _t)
+    docs, vocab = _wordpiece_model(spark, sf_dir)
     docs2 = docs.filter(F.col("text").isNotNull()).filter(
         F.size(tokens_expr(F.col("text"))) > 0
     )
@@ -5896,13 +5964,14 @@ def q_wordpiece_subword_vocab(
     )
 
 
-def q_wordpiece_vocab(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("wordpiece_vocab", WORDPIECE_VOCAB_ORACLE)
+def q_wordpiece_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained WordPiece vocabulary itself (piece, merge rank; rank 0
     = alphabet). Both sides read the persisted artifact — the
     shared-artifact check (training is pinned by tests/test_wordpiece.py;
     the exact-rational likelihood merge loop cannot realistically be
     replayed in SQL the way 40-merge BPE training is)."""
-    _wordpiece_model(spark, sf_dir, _t)  # train + persist for THIS sf_dir
+    _wordpiece_model(spark, sf_dir)  # train + persist for THIS sf_dir
     return spark.read.parquet(WORDPIECE_VOCAB_PATH).select(
         "piece", F.col("rank").cast("long").alias("rank")
     )
@@ -5964,7 +6033,8 @@ FROM s
 """
 
 
-def q_gopher_quality_rules(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("gopher_quality_rules", GOPHER_RULES_ORACLE)
+def q_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gopher rule-based quality filter (Rae et al. 2021 §A1.1),
     adapted to the fixture's scale: word-count bounds, mean-word-length
     bounds, symbol-to-word ratio cap, a minimum count of DISTINCT
@@ -6020,8 +6090,9 @@ FROM ranked
 )
 
 
+@query("perplexity_buckets", PPLX_BUCKETS_ORACLE)
 def q_perplexity_buckets(
-    spark: SparkSession, sf_dir: str, _t, lang_source: str = "column"
+    spark: SparkSession, sf_dir: str, lang_source: str = "column"
 ) -> DataFrame:
     """CCNet's head/middle/tail split (Wenzek et al. 2020): per LANGUAGE,
     documents ranked by bigram-LM perplexity into tertiles — the bucket
@@ -6186,7 +6257,8 @@ FROM p1 LEFT JOIN p2 USING (doc_id)
 )
 
 
-def q_langid_scores(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("langid_scores", LANGID_ORACLE)
+def q_langid_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language identification over the corpus (operators/langid.py: a
     hashed char-trigram linear classifier, the public fastText-langid /
     Cavnar-Trenkle shape): every per-language operator in this engine
@@ -6224,7 +6296,8 @@ def q_langid_scores(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     )
 
 
-def q_langid_confidence(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("langid_confidence", LANGID_CONFIDENCE_ORACLE)
+def q_langid_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier confidence per document: the integer margin between the
     top two language scores, and the CCNet-style ``confident`` flag
     (margin >= {LANGID_CONF_PCT}% of the winning score — exact integer
@@ -6295,9 +6368,8 @@ FROM ranked
 )
 
 
-def q_perplexity_buckets_derived(
-    spark: SparkSession, sf_dir: str, _t
-) -> DataFrame:
+@query("perplexity_buckets_derived_lang", PPLX_BUCKETS_DERIVED_ORACLE)
+def q_perplexity_buckets_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_perplexity_buckets with lang_source='derived': the CCNet
     configuration — fastText-style language ID runs BEFORE the
     per-language perplexity split, so the buckets key on the
@@ -6305,7 +6377,7 @@ def q_perplexity_buckets_derived(
     run exactly this order). The oracle replays the classifier AND the
     split, so the derived-lang wiring is cross-engine-verified end to
     end, not only pytest-pinned."""
-    return q_perplexity_buckets(spark, sf_dir, _t, lang_source="derived")
+    return q_perplexity_buckets(spark, sf_dir, lang_source="derived")
 
 
 # Render the round-10 docstring placeholders (code-review r10: only

@@ -2,7 +2,8 @@
 rollup, pivot, set ops, semi/anti joins, distinct aggregates, sessionization,
 as-of join (SURVEY.md §2.5-§2.8 + free-from-Spark capabilities).
 
-Registered via plans.registry.query() at import time (see registry bottom).
+Each query registers itself by decorating its definition with
+``plans.registry.query(name, ORACLE)``.
 """
 
 from __future__ import annotations
@@ -11,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.signal_pipeline import DEC
+from .registry import _dsum, _ntz_epoch_s, _t, query
 
 # ---------------------------------------------------------------------------
 # §2.7 window functions: row_number / lag / lead / running sum
@@ -30,7 +32,8 @@ WINDOW w AS (PARTITION BY l_orderkey ORDER BY l_linenumber, l_quantity)
 """
 
 
-def q_window_functions(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("window_functions", WINDOW_FUNCS_ORACLE)
+def q_window_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-order running analytics. One exchange on l_orderkey serves all four
     window functions (same partitioning + ordering → single Window node).
     Running float sums accumulate in frame order — deterministic.
@@ -65,7 +68,8 @@ WHERE rk <= 3
 """
 
 
-def q_topk_per_group(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("topk_per_group", TOPK_ORACLE)
+def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 lineitems per supplier by price. At scale: one exchange on
     l_suppkey; Spark pushes a per-partition rank limit (WindowGroupLimit)
     before the shuffle, so the exchange carries ≤k rows per key."""
@@ -94,7 +98,8 @@ GROUP BY ROLLUP(l_returnflag, l_linestatus)
 """
 
 
-def q_rollup(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("rollup_subtotals", ROLLUP_ORACLE)
+def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical subtotals. Catalyst expands the rollup into grouping sets
     over ONE shuffle (Expand node) — not one pass per level."""
     li = _t(spark, sf_dir, "lineitem")
@@ -119,7 +124,8 @@ GROUP BY l_returnflag
 """
 
 
-def q_pivot(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("pivot_by_status", PIVOT_ORACLE)
+def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with explicit value list (no extra distinct-values job —
     important at scale: an implicit pivot first scans for distinct keys)."""
     li = _t(spark, sf_dir, "lineitem")
@@ -151,7 +157,8 @@ SELECT 'union' AS op, CAST(count(*) AS BIGINT) AS n FROM (
 """
 
 
-def q_set_ops(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("set_ops_priority_customers", SET_OPS_ORACLE)
+def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT / UNION-distinct (U1 + the free set-op surface)."""
     o = _t(spark, sf_dir, "orders")
     urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
@@ -185,7 +192,8 @@ GROUP BY 1
 """
 
 
-def q_anti_join(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("customers_without_orders", ANTI_JOIN_ORACLE)
+def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no URGENT orders, per nation: left_anti (NOT EXISTS) +
     a broadcast dim join. The anti join shuffles on custkey only, and the
     priority filter is pushed into the orders scan."""
@@ -214,7 +222,8 @@ GROUP BY o_orderstatus
 """
 
 
-def q_distinct_agg(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("distinct_aggregates", DISTINCT_AGG_ORACLE)
+def q_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-distinct aggregate: Catalyst expands to a single Expand-based
     plan. At 100 TB prefer approx_count_distinct (exposed by the engine; not
     oracle-comparable bit-for-bit, so checked by dedicated tests instead)."""
@@ -253,7 +262,8 @@ GROUP BY 1, 2
 """
 
 
-def q_sessionize(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("sessionize_events", SESSIONIZE_ORACLE)
+def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (1h gap): lag + cumulative-sum session ids,
     all integer arithmetic on epoch-micros. One exchange on user_id serves
     both window functions and the final aggregate."""
@@ -303,12 +313,11 @@ GROUP BY CUBE (o_orderpriority, o_orderstatus)
 """
 
 
-def q_cube(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("cube_order_stats", CUBE_ORACLE)
+def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (priority, status): all 4 grouping sets in one pass.
     Catalyst expands the cube with an Expand node before ONE hash aggregate —
     rows are replicated 4x map-side, but there is still a single exchange."""
-    from .registry import _dsum
-
     o = _t(spark, sf_dir, "orders")
     return o.cube("o_orderpriority", "o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -336,7 +345,8 @@ GROUP BY 1, 2
 """
 
 
-def q_sliding_window(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("sliding_window_events", SLIDING_ORACLE)
+def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute windows sliding every 5: each row lands in exactly 2 windows.
     Expressed as integer bucket arithmetic + explode (bit-identical to the
     oracle and to Spark's own window(col, '10 minutes', '5 minutes'), which
@@ -356,7 +366,8 @@ def q_sliding_window(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     )
 
 
-def q_asof_join(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("asof_join_purchases", ASOF_ORACLE)
+def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each error event picks the most recent purchase value of
     the same user at-or-before it.
 
@@ -411,7 +422,8 @@ GROUP BY 1
 """
 
 
-def q_percentiles(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("order_value_percentiles", PERCENTILES_ORACLE)
+def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linearly-interpolated percentiles per group (Spark `percentile`
     == DuckDB `quantile_cont`, verified bit-exact — both use the
     (n-1)*p rank with linear interpolation). Exact percentile buffers each
@@ -447,7 +459,8 @@ GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
 """
 
 
-def q_grouping_sets(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("grouping_sets_revenue", GROUPING_SETS_ORACLE)
+def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary GROUPING SETS (not expressible as one rollup/cube): per
     priority, per status, and grand total in ONE pass. Catalyst expands the
     sets via Expand (3x row replication pre-aggregation) — one scan + one
@@ -494,7 +507,8 @@ GROUP BY 1
 """
 
 
-def q_range_join(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("range_join_click_attribution", RANGE_JOIN_ORACLE)
+def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval range join — attribution's core shape (events within a
     window before a conversion). A naive (user, time-range) theta-join
     degenerates to a per-user cross product; this plan BINS both sides to
@@ -503,8 +517,6 @@ def q_range_join(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     Catalyst plans a hash join — the residual range predicate filters
     within-bin. Bin width == window width bounds the false-candidate factor
     at 2x. The left join keeps zero-click purchases (count(c) = 0)."""
-    from .registry import _dsum
-
     ev = _t(spark, sf_dir, "events")
     width_us = 30 * 60 * 1_000_000
     p = ev.filter(F.col("event_type") == "purchase").select(
@@ -553,8 +565,9 @@ FROM ranked WHERE rn <= 20
 """
 
 
+@query("stratified_sample_per_lang", STRATIFIED_SAMPLE_ORACLE)
 def q_stratified_sample(
-    spark: SparkSession, sf_dir: str, _t, lang_source: str = "column"
+    spark: SparkSession, sf_dir: str, lang_source: str = "column"
 ) -> DataFrame:
     """Exactly-n-per-stratum sampling with a content-stable order: rank each
     stratum by md5(salt|id) — a deterministic proxy for 'random' that every
@@ -612,14 +625,13 @@ GROUP BY 1
 """
 
 
-def q_histogram(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("order_price_histogram", HISTOGRAM_ORACLE)
+def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution histogram in one aggregation: width_bucket is a pure
     projection (no per-group sort, no percentile buffer), so the plan is a
     partial-aggregated groupBy on a small integer key — the shape to prefer
     over exact percentiles when only the distribution's shape is needed at
     100 TB."""
-    from .registry import _dsum
-
     o = _t(spark, sf_dir, "orders")
     return (
         o.withColumn(
@@ -662,7 +674,8 @@ WINDOW
 """
 
 
-def q_moving_aggregates(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("moving_aggregates", MOVING_AGG_ORACLE)
+def q_moving_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moving/frame window aggregates per customer order history: 3-order
     moving sum (bounded ROWS frame), order quartile (ntile), percent_rank /
     cume_dist, and a 30-day trailing order count (value RANGE frame over
@@ -675,8 +688,6 @@ def q_moving_aggregates(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
     are single IEEE divisions of exact integer ranks. Scale: windows stream
     per partition with O(frame) state — nothing materializes a group.
     """
-    from .registry import _ntz_epoch_s
-
     o = _t(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
@@ -726,7 +737,8 @@ FROM wealthy w FULL OUTER JOIN open_orders o ON w.c_custkey = o.o_custkey
 """
 
 
-def q_full_outer_reconciliation(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("full_outer_reconciliation", FULL_OUTER_ORACLE)
+def q_full_outer_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER reconciliation of two derived sets (wealthy customers vs
     customers with open orders): rows surviving on either side, null-filled
     on the other, tagged by presence.
@@ -774,7 +786,8 @@ FROM lineitem GROUP BY 1
 """
 
 
-def q_skew_salted_aggregate(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("skew_salted_aggregate", SKEW_SALTED_ORACLE)
+def q_skew_salted_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hot-key mitigation (operators.skew.salted_aggregate) as an
     oracle-checked query: group lineitem by the 3-value l_returnflag — a
     deliberately skewed key where every group is hot — through the

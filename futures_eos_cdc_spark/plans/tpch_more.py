@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.signal_pipeline import DEC, signals_from_events, with_strength
+from .registry import _dsum, _ntz_epoch_s, _ntz_lit, _t, query
 
 # ---------------------------------------------------------------------------
 # Q3 shape: shipping-priority revenue (3-way join, filter both sides, top-k)
@@ -34,11 +35,10 @@ LIMIT 10
 """
 
 
-def q_shipping_priority(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q3_shipping_priority", Q3_ORACLE)
+def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape. Both date filters push to the parquet scans; customer
     is the small build side; TakeOrderedAndProject caps the result."""
-    from .registry import _dsum, _ntz_epoch_s, _ntz_lit
-
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < _ntz_lit(_CUTOFF))
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > _ntz_lit(_CUTOFF))
@@ -75,7 +75,8 @@ GROUP BY 1
 """
 
 
-def q_regional_revenue(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q5_regional_revenue", Q5_ORACLE)
+def q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape. region/nation broadcast (the r_name filter prunes at
     the broadcast build), customer broadcasts at small SF / shuffles at
     scale (AQE decides), one exchange for the final 1-key aggregate."""
@@ -119,13 +120,12 @@ WHERE epoch(l_shipdate) >= {_Q6_LO_S}
 """
 
 
-def q_forecast_revenue(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q6_forecast_revenue", Q6_ORACLE)
+def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: every predicate pushes to the parquet scan
     (PushedFilters on l_shipdate/l_discount/l_quantity), projection prunes to
     3 columns, and the aggregate is a single partial+final pair with no group
     keys — at 100 TB this is I/O-bound by exactly the pruned column bytes."""
-    from .registry import _dsum, _ntz_lit
-
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -162,13 +162,12 @@ GROUP BY o_orderpriority
 """
 
 
-def q_order_priority(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q4_order_priority", Q4_ORACLE)
+def q_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS → left-semi join. The semi-join shuffles only
     l_orderkey (the probe payload is one bigint per returned lineitem); the
     returnflag filter pushes to the parquet scan; the 5-value groupBy is
     map-side partial."""
-    from .registry import _ntz_lit
-
     o = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ntz_lit("1997-01-01 00:00:00"))
         & (F.col("o_orderdate") < _ntz_lit("1998-01-01 00:00:00"))
@@ -204,7 +203,8 @@ GROUP BY p.p_brand
 """
 
 
-def q_above_brand_avg(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("above_brand_avg_parts", ABOVE_BRAND_AVG_ORACLE)
+def q_above_brand_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-subquery shape (price > AVG over its own brand), decorrelated
     the way Catalyst itself rewrites it: aggregate-then-join. The brand-avg
     side is tiny (|brands|) → broadcast; the fact side never shuffles."""
@@ -247,12 +247,11 @@ GROUP BY l.l_linestatus
 """
 
 
-def q_priority_shipping(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q12_priority_shipping", Q12_ORACLE)
+def q_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: join + CASE-inside-SUM conditional aggregation. The
     date filter pushes to the lineitem scan; the join shuffles only
     (l_orderkey, l_linestatus) vs (o_orderkey, o_orderpriority)."""
-    from .registry import _ntz_lit
-
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = (
         _t(spark, sf_dir, "lineitem")
@@ -289,7 +288,8 @@ JOIN part p ON l.l_partkey = p.p_partkey
 """
 
 
-def q_promo_revenue(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q14_promo_revenue", Q14_ORACLE)
+def q_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: CASE-gated revenue over total revenue. part is the
     small side → broadcast; single global aggregate, no group keys."""
     li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_extendedprice", "l_discount")
@@ -336,12 +336,11 @@ LIMIT 20
 """
 
 
-def q_large_volume_orders(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q18_large_volume_orders", Q18_ORACLE)
+def q_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: grouped-HAVING pre-filter (the `big` semi-side is the
     aggregate itself), then 3-way join + re-aggregate + top-k. The HAVING
     output is tiny → AQE broadcasts it into the orders join."""
-    from .registry import _dsum, _ntz_epoch_s
-
     li = _t(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
@@ -388,7 +387,8 @@ GROUP BY 1, 2, 3
 """
 
 
-def q_strength_histogram(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("signal_strength_histogram", STRENGTH_ORACLE)
+def q_strength_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = with_strength(signals_from_events(_t(spark, sf_dir, "events")))
     return sig.groupBy("timeframe", "strength", "strength_weight").agg(
         F.count(F.lit(1)).alias("n")
@@ -415,7 +415,8 @@ FROM lineitem
 """
 
 
-def q_approx_aggregates(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("approx_aggregates", APPROX_AGG_ORACLE)
+def q_approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL++ distinct counts and quantile sketches, checked in-query.
 
     approx_count_distinct (default rsd 5%) must land within 15% (3σ) of the

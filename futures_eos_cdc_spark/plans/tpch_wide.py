@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.signal_pipeline import DEC
+from .registry import _dsum, _ntz_lit, _t, query
 
 # ---------------------------------------------------------------------------
 # Q7 shape: trade volume between two nations by year (6-way join, OR pair)
@@ -45,7 +46,8 @@ GROUP BY 1, 2, 3
 """
 
 
-def q_nation_trade_volume(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q7_nation_trade_volume", Q7_ORACLE)
+def q_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: lineitem fact joined to two nation-qualified dims with
     a disjunctive nation-pair predicate. supplier/customer/nation broadcast
     (dims); the fact side never shuffles for the joins — one exchange for the
@@ -114,7 +116,8 @@ GROUP BY o_year
 """
 
 
-def q_market_share(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q8_market_share", Q8_ORACLE)
+def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: conditional-share aggregation (CASE-gated sum over
     total sum) across a 7-way join. All dims broadcast; the region filter
     prunes the customer-side nation broadcast build; single exchange on the
@@ -176,7 +179,8 @@ GROUP BY 1, 2
 """
 
 
-def q_profit_by_nation(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q9_profit_by_nation", Q9_ORACLE)
+def q_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (supplycost → 0.4×retailprice proxy: the fixture has no
     partsupp). The selective part-name LIKE prunes the broadcast build side,
     so the fact scan's join probe discards ~%s of rows before the orders
@@ -237,13 +241,12 @@ LIMIT 20
 """
 
 
-def q_returned_items(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q10_returned_items", Q10_ORACLE)
+def q_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape: both filters push to the parquet scans (orderdate
     range on orders, returnflag on lineitem); nation broadcasts; the
     customer join shuffles only post-filter orders; TakeOrderedAndProject
     caps the result at 20."""
-    from .registry import _dsum, _ntz_lit
-
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= _ntz_lit("1997-01-01 00:00:00"))
@@ -283,7 +286,8 @@ WHERE v.value > t.total * 0.0105
 """
 
 
-def q_important_suppliers(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q11_important_suppliers", Q11_ORACLE)
+def q_important_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-key value vs a global-total scalar subquery in
     HAVING. The scalar total is a 1-row broadcast-nested-loop (free); the
     per-supplier aggregate is the only exchange. The total is computed
@@ -318,7 +322,8 @@ GROUP BY c_count
 """
 
 
-def q_customer_order_distribution(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q13_order_count_distribution", Q13_ORACLE)
+def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape: left outer join with an extra join-side predicate
     (NOT a WHERE — zero-order customers must survive), then a two-level
     aggregate: per-customer count → histogram of counts. Two exchanges
@@ -357,14 +362,13 @@ WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
 """
 
 
-def q_top_supplier(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q15_top_supplier", Q15_ORACLE)
+def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: grouped revenue view joined back against its own MAX
     (scalar subquery → 1-row broadcast). Equality on the decimal-exact double
     is deterministic across engines. The revenue view is computed once and
     reused for both sides (Spark caches nothing here — the subplan is tiny
     and AQE reuses the exchange)."""
-    from .registry import _dsum, _ntz_lit
-
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ntz_lit("1997-01-01 00:00:00"))
         & (F.col("l_shipdate") < _ntz_lit("1997-04-01 00:00:00"))
@@ -399,7 +403,8 @@ GROUP BY 1, 2, 3
 """
 
 
-def q_supplier_diversity(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q16_supplier_diversity", Q16_ORACLE)
+def q_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: NOT IN → broadcast anti-join (the "complaints"
     exclusion), negated dim filters on the broadcast build, count-distinct
     of the supplier key per 3-key group. The distinct-agg expands to a
@@ -441,7 +446,8 @@ WHERE p.p_brand = 'Brand#3'
 """
 
 
-def q_small_quantity_revenue(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q17_small_quantity_revenue", Q17_ORACLE)
+def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape: correlated AVG-per-part subquery, decorrelated to
     aggregate-then-join (Catalyst's own rewrite). The per-part avg aggregates
     before joining so the fact side joins against |parts| rows (broadcast),
@@ -485,7 +491,8 @@ WHERE
 """
 
 
-def q_disjunctive_revenue(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q19_disjunctive_revenue", Q19_ORACLE)
+def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: three OR'd conjunctive clauses spanning both join
     sides. Catalyst extracts the common single-side implications
     (p_type IN (...), l_quantity BETWEEN global min/max) as pushed-down
@@ -544,13 +551,12 @@ WHERE s.s_suppkey IN (SELECT l_suppkey FROM shipped)
 """
 
 
-def q_excess_stock_suppliers(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q20_excess_stock_suppliers", Q20_ORACLE)
+def q_excess_stock_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: nested semi-join chain — parts by name LIKE →
     qualifying shipped volume per supplier (grouped HAVING) → IN → left-semi
     against the supplier dim. The HAVING output is a handful of supplier
     keys → broadcast semi-join; no shuffle on the dim side."""
-    from .registry import _ntz_lit
-
     red = _t(spark, sf_dir, "part").filter(F.col("p_name").like("red%")).select("p_partkey")
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ntz_lit("1997-01-01 00:00:00"))
@@ -597,7 +603,8 @@ LIMIT 10
 """
 
 
-def q_sole_blame_suppliers(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q21_sole_blame_suppliers", Q21_ORACLE)
+def q_sole_blame_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: the hardest subquery pattern — EXISTS (another
     supplier touched the order) AND NOT EXISTS (another supplier also
     failed). Both become self-joins on l_orderkey with a non-equi suppkey
@@ -659,7 +666,8 @@ GROUP BY 1
 """
 
 
-def q_idle_wealthy_customers(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q22_idle_wealthy_customers", Q22_ORACLE)
+def q_idle_wealthy_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: global scalar AVG subquery (1-row broadcast) gating a
     NOT EXISTS anti-join (customers with no URGENT order — the fixture has an
     order for every customer, so the classic "no orders at all" form is
@@ -720,7 +728,8 @@ LIMIT 100
 """
 
 
-def q_min_cost_supplier(spark: SparkSession, sf_dir: str, _t) -> DataFrame:
+@query("q2_min_cost_supplier", Q2_ORACLE)
+def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: for each qualifying part, the supplier(s) in a region
     offering the minimum supply cost — the classic correlated-MIN subquery,
     decorrelated to aggregate-then-rejoin (Catalyst's own rewrite of the

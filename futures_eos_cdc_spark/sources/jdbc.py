@@ -1,8 +1,8 @@
 """S6: JDBC scan/sink wrappers (DatabaseManager.kt:90-121's query surface).
 
-Code-complete over the standard spark JDBC source; a driver jar on the
-classpath is required at call time (none ships in this container, so these
-are exercised only by plan construction in tests, not execution).
+Built on Spark's standard JDBC source; the database's driver jar must be on
+the classpath. tests/test_relational_extra.py runs the scan end to end
+against the embedded Derby that ships with Spark.
 
 Scale notes: ``partition_column``/bounds split the scan into parallel range
 queries — without them a JDBC read is a single task regardless of cluster

@@ -5,9 +5,9 @@ Maps the reference's Kafka Streams topology onto Spark Structured Streaming
 
 - T1/T3  5-min tumbling window, zero grace → window() + withWatermark 0s
          (late rows dropped identically)
-- T2     append mode = exactly one decision per (symbol, window) — the
-         engine default (deliberate re-spec, §7.4.4); update mode available
-         via output_mode for reference-like per-trigger emission cadence
+- T2     append mode = exactly one decision per (symbol, window), emitted
+         once the watermark passes the window end (deliberate re-spec of the
+         reference's per-update emission, §7.4.4)
 - T7     content dedup → dropDuplicatesWithinWatermark
 - S1-S4  sources: file stream (tests/demo), rate source (load probes), and a
          Kafka builder (requires the spark-sql-kafka package on the
@@ -17,16 +17,19 @@ Maps the reference's Kafka Streams topology onto Spark Structured Streaming
          (streaming/outbox.py) — same guarantee as the reference, different
          mechanics (§7.3)
 
-Streaming plan shape: unlike the batch path (window functions), streaming
-uses ONE stateful aggregation per (symbol, window) that collects the window's
-signals and computes every A2-A10/D1-D5 quantity with array expressions in
-the finishing projection. One shuffle, one state store; state per key is
-bounded by the rows that fall in one 5-minute window per symbol. At 100 TB/d
-ingest with few symbols that per-key bound is the thing to watch — the
-mitigation is pre-aggregating per (symbol, window, timeframe) with chained
-windowed aggregations (Spark ≥3.4 supports multiple stateful operators), at
-the cost of a second state store; the array form keeps the demo simple and
-bit-compatible with the batch path (decimal-exact folds, same tie-breaks).
+Streaming plan shape: unlike the batch path (window functions), both
+decision streams compute every A2-A10/D1-D5 quantity with array expressions
+in one finishing projection, decisions_from_signal_array (bit-compatible
+with the batch path: decimal-exact folds, same tie-breaks). They differ in
+the state behind it:
+
+- streaming_decide: ONE stateful windowed aggregation per (symbol, window)
+  that collects every signal of the window. One shuffle, one state store,
+  but state per key grows with the ingest rate times the window length.
+- streaming_decide_bounded: a custom stateful operator
+  (applyInPandasWithState) keeping only the per-timeframe last-BUFFER_KEEP
+  buffers and counters per key, whatever the rate — the reference's own
+  state shape, and the path for high ingest rates.
 """
 
 from __future__ import annotations
@@ -36,8 +39,12 @@ from pyspark.sql import functions as F
 
 from ..operators.signal_pipeline import (
     BUFFER_KEEP,
+    BUY_MIN,
     DEC,
     PRICE_MULT,
+    SELL_MAX,
+    STRONG_BUY_MIN,
+    STRONG_SELL_MAX,
     TOP_RECENT,
     WINDOW_SECONDS,
 )
@@ -819,22 +826,21 @@ def decisions_from_signal_array(
     """
     out = agg.withColumn("sorted_sigs", F.array_sort("sigs", _cmp_recent_first))
 
-    tfs = ["1m", "5m", "15m"]
     per_tf = {
         tf: _tf_cols(
             F.col("sorted_sigs"),
             tf,
             per_tf_counts.get(tf) if per_tf_counts else None,
         )
-        for tf in tfs
+        for tf in _TFS
     }
 
     n_timeframes = sum(
-        (F.when(per_tf[tf]["present"], 1).otherwise(0) for tf in tfs), F.lit(0)
+        (F.when(per_tf[tf]["present"], 1).otherwise(0) for tf in _TFS), F.lit(0)
     )
-    balance = sum((per_tf[tf]["balance"] for tf in tfs), F.lit(0))
+    balance = sum((per_tf[tf]["balance"] for tf in _TFS), F.lit(0))
     n_signals = sum(
-        (F.when(per_tf[tf]["present"], per_tf[tf]["n_kept"]).otherwise(0) for tf in tfs),
+        (F.when(per_tf[tf]["present"], per_tf[tf]["n_kept"]).otherwise(0) for tf in _TFS),
         F.lit(0),
     )
     sum_avg = sum(
@@ -842,7 +848,7 @@ def decisions_from_signal_array(
             F.when(per_tf[tf]["present"], per_tf[tf]["avg_price"].cast(DEC)).otherwise(
                 F.lit(0).cast(DEC)
             )
-            for tf in tfs
+            for tf in _TFS
         ),
         F.lit(0).cast(DEC),
     )
@@ -851,7 +857,7 @@ def decisions_from_signal_array(
             F.when(per_tf[tf]["present"], per_tf[tf]["vol"].cast(DEC)).otherwise(
                 F.lit(0).cast(DEC)
             )
-            for tf in tfs
+            for tf in _TFS
         ),
         F.lit(0).cast(DEC),
     )
@@ -865,7 +871,7 @@ def decisions_from_signal_array(
                     F.when(per_tf[tf]["present"], per_tf[tf]["maj"]).otherwise(
                         F.lit(None)
                     )
-                    for tf in tfs
+                    for tf in _TFS
                 ]
             ),
             lambda m: m.isNotNull(),
@@ -886,7 +892,7 @@ def decisions_from_signal_array(
         F.array(
             *[
                 F.slice(F.filter(F.col("sorted_sigs"), _is_tf(tf)), 1, BUFFER_KEEP)
-                for tf in tfs
+                for tf in _TFS
             ]
         )
     )
@@ -906,10 +912,10 @@ def decisions_from_signal_array(
 
     bal = F.col("balance")
     action = (
-        F.when(bal > 5, "STRONG_BUY")
-        .when(bal > 2, "BUY")
-        .when(bal < -5, "STRONG_SELL")
-        .when(bal < -2, "SELL")
+        F.when(bal > STRONG_BUY_MIN, "STRONG_BUY")
+        .when(bal > BUY_MIN, "BUY")
+        .when(bal < STRONG_SELL_MAX, "STRONG_SELL")
+        .when(bal < SELL_MAX, "SELL")
         .otherwise("HOLD")
     )
     enriched = enriched.withColumn("action", action)

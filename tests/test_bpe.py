@@ -193,15 +193,14 @@ def test_subword_vocab_mass_equals_corpus_token_count(spark, sf_dir):
         q_bpe_subword_vocab,
         q_bpe_token_counts,
     )
-    from futures_eos_cdc_spark.plans.registry import _t
 
     vocab_mass = (
-        q_bpe_subword_vocab(spark, sf_dir, _t)
+        q_bpe_subword_vocab(spark, sf_dir)
         .agg(F.sum("n_occurrences"))
         .collect()[0][0]
     )
     corpus_tokens = (
-        q_bpe_token_counts(spark, sf_dir, _t).agg(F.sum("n_tokens")).collect()[0][0]
+        q_bpe_token_counts(spark, sf_dir).agg(F.sum("n_tokens")).collect()[0][0]
     )
     assert vocab_mass == corpus_tokens > 0
 
@@ -362,20 +361,19 @@ def test_v1k_family_internal_consistency(spark, sf_dir):
         q_bpe_token_blocks_v1k,
         q_bpe_token_counts_v1k,
     )
-    from futures_eos_cdc_spark.plans.registry import _t
 
     total_counts = (
-        q_bpe_token_counts_v1k(spark, sf_dir, _t)
+        q_bpe_token_counts_v1k(spark, sf_dir)
         .agg(F.sum("n_tokens").alias("s"))
         .collect()[0]["s"]
     )
     vocab_mass = (
-        q_bpe_subword_vocab_v1k(spark, sf_dir, _t)
+        q_bpe_subword_vocab_v1k(spark, sf_dir)
         .agg(F.sum("n_occurrences").alias("s"))
         .collect()[0]["s"]
     )
     blocks_total = (
-        q_bpe_token_blocks_v1k(spark, sf_dir, _t)
+        q_bpe_token_blocks_v1k(spark, sf_dir)
         .agg(F.sum("n_tokens").alias("s"))
         .collect()[0]["s"]
     )
@@ -616,7 +614,6 @@ def test_v1k_poisoned_dir_fails_readably_at_construction(spark, sf_dir, monkeypa
     import pytest as _pytest
 
     from futures_eos_cdc_spark.plans import dataprep as dp
-    from futures_eos_cdc_spark.plans.registry import _t
 
     # a regular FILE where the merge-table directory should go — the
     # canonical poisoned value (os.makedirs cannot replace it)
@@ -626,7 +623,7 @@ def test_v1k_poisoned_dir_fails_readably_at_construction(spark, sf_dir, monkeypa
         monkeypatch.setattr(dp, "BPE_V1K_MERGES_PATH", poison.name)
         monkeypatch.setattr(dp, "_BPE_V1K_FILE_SF", {})
         with _pytest.raises(RuntimeError, match="SPARK_GRAFT_BPE_V1K_DIR"):
-            dp.q_bpe_token_counts_v1k(spark, sf_dir, _t)
+            dp.q_bpe_token_counts_v1k(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------

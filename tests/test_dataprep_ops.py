@@ -577,16 +577,16 @@ def test_token_totals_closed_form_equals_fold():
         assert closed == fold, L
 
 
-def test_token_blocks_keeps_null_lang_docs(spark):
+def test_token_blocks_keeps_null_lang_docs(spark, tmp_path):
     """ADVICE regression: the (lang, shard) stitch join must be null-safe —
     NULL-lang documents pack like any other language group."""
     import futures_eos_cdc_spark.plans.dataprep as dp
 
-    docs = spark.createDataFrame(
+    spark.createDataFrame(
         [(1, None, "a b c d e f"), (2, "en", "g h i"), (40001, None, "x y z")],
         "doc_id long, lang string, text string",
-    )
-    out = dp.q_token_blocks(spark, "ignored", lambda *_: docs).collect()
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    out = dp.q_token_blocks(spark, str(tmp_path)).collect()
     assert {r.doc_id for r in out} == {1, 2, 40001}
     by_doc = {r.doc_id: r for r in out}
     assert by_doc[1].lang is None  # sentinel never leaks into output
@@ -718,9 +718,8 @@ def test_bm25_ranking_invariants(spark, sf_dir):
     the doc_id tiebreak, and every scored doc actually contains at least
     one query term."""
     from futures_eos_cdc_spark.plans.dataprep import BM25_QUERIES, q_bm25_topk
-    from futures_eos_cdc_spark.plans.registry import _t
 
-    res = q_bm25_topk(spark, sf_dir, _t).collect()
+    res = q_bm25_topk(spark, sf_dir).collect()
     assert len(res) > 0
     by_q = {}
     for r in res:
@@ -739,7 +738,7 @@ def test_bm25_ranking_invariants(spark, sf_dir):
         for r in rows:
             assert docs[r.doc_id] & terms[qid]
 
-def test_perplexity_hand_computed_on_tiny_corpus(spark, sf_dir):
+def test_perplexity_hand_computed_on_tiny_corpus(spark, tmp_path):
     """Pin the bigram-LM semantics by exact hand computation: add-k
     conditional counts, 6dp-rounded per-bigram log-probs, exact decimal
     sum, mean negated. (The fixture corpus is random token soup, so
@@ -751,14 +750,12 @@ def test_perplexity_hand_computed_on_tiny_corpus(spark, sf_dir):
     from futures_eos_cdc_spark.plans.dataprep import PPLX_K, q_doc_perplexity
 
     texts = {1: "a b a c", 2: "a b b", 3: "c a b"}
-    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-
-    def _t_tiny(spark_, sf_dir_, name):
-        assert name == "documents"
-        return docs
+    spark.createDataFrame(list(texts.items()), "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
 
     got = {r.doc_id: (r.n_bigrams, r.avg_neg_logprob)
-           for r in q_doc_perplexity(spark, sf_dir, _t_tiny).collect()}
+           for r in q_doc_perplexity(spark, str(tmp_path)).collect()}
 
     toks = {d: t.split() for d, t in texts.items()}
     bigrams = [(d, (w[i - 1], w[i])) for d, w in toks.items() for i in range(1, len(w))]
@@ -1037,7 +1034,6 @@ def test_hybrid_rrf_equals_fusion_of_components(spark, sf_dir):
         _bm25_scores,
         q_hybrid_rrf,
     )
-    from futures_eos_cdc_spark.plans.registry import _t
     from futures_eos_cdc_spark.operators.similarity import brute_force_topk
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1084,7 +1080,7 @@ def test_hybrid_rrf_equals_fusion_of_components(spark, sf_dir):
             want[(q, d)] = (-neg, i)
     got = {
         (r.query_id, r.doc_id): (r.rrf_score, r.rank)
-        for r in q_hybrid_rrf(spark, sf_dir, _t).collect()
+        for r in q_hybrid_rrf(spark, sf_dir).collect()
     }
     assert got == want
     # both systems genuinely contribute: some fused rows are lexical-only
@@ -1482,9 +1478,8 @@ def test_prototype_pruning_semantics(spark, sf_dir):
     is below every dropped one's within a cluster, and the kept count is
     the exact integer-rational cut."""
     from futures_eos_cdc_spark.plans.dataprep import q_prototype_pruning
-    from futures_eos_cdc_spark.sources.tables import load_table
 
-    rows = q_prototype_pruning(spark, sf_dir, load_table).collect()
+    rows = q_prototype_pruning(spark, sf_dir).collect()
     by_cluster: dict = {}
     for r in rows:
         by_cluster.setdefault(r.cluster_id, []).append(r)
@@ -1518,7 +1513,7 @@ def test_d4_composes_its_two_stages(spark, sf_dir):
     from futures_eos_cdc_spark.operators.similarity import semantic_dedup
     from futures_eos_cdc_spark.sources.tables import load_table
 
-    rows = q_d4_selection(spark, sf_dir, load_table).collect()
+    rows = q_d4_selection(spark, sf_dir).collect()
     e = load_table(spark, sf_dir, "embeddings")
     cents = _trained_centroids(spark, sf_dir, e)
     sem_kept = {

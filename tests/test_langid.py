@@ -179,12 +179,12 @@ def test_derived_lang_wiring_matches_fixture_on_agreeing_docs(spark, sf_dir):
     for q in (q_perplexity_buckets, q_stratified_sample):
         base = {
             r["doc_id"]: tuple(r)
-            for r in q(spark, sf_dir, load_table).collect()
+            for r in q(spark, sf_dir).collect()
             if r["doc_id"] in agree_ids
         }
         derived = {
             r["doc_id"]: tuple(r)
-            for r in q(spark, sf_dir, load_table, lang_source="derived").collect()
+            for r in q(spark, sf_dir, lang_source="derived").collect()
             if r["doc_id"] in agree_ids
         }
         # same stratum -> same bucket/rank wherever the label agrees AND
@@ -197,7 +197,7 @@ def test_derived_lang_wiring_matches_fixture_on_agreeing_docs(spark, sf_dir):
             assert base[did][1] == derived[did][1]  # lang column identical
 
     with pytest.raises(ValueError):
-        q_perplexity_buckets(spark, sf_dir, load_table, lang_source="bogus")
+        q_perplexity_buckets(spark, sf_dir, lang_source="bogus")
 
 def test_langid_ranked_and_confidence_semantics(spark):
     """The ranked expression orders candidates best-first with the same

@@ -175,10 +175,7 @@ def test_leakage_safe_split_keeps_near_dup_pairs_together(spark, sf_dir):
     from futures_eos_cdc_spark.operators.dedup import minhash_lsh_pairs
     from futures_eos_cdc_spark.plans.dataprep import q_leakage_safe_split
 
-    def _t(s, d, t):
-        return s.read.parquet(f"{d}/{t}.parquet")
-
-    out = q_leakage_safe_split(spark, sf_dir, _t)
+    out = q_leakage_safe_split(spark, sf_dir)
     split_of = {r.doc_id: r.split for r in out.collect()}
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pairs = [

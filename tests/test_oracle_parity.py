@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 
+import futures_eos_cdc_spark
 from futures_eos_cdc_spark.plans import ORACLES, QUERIES
+from futures_eos_cdc_spark.plans.registry import query
 from tests.oracle_utils import compare, duckdb_con
 
 
@@ -33,3 +38,43 @@ def test_all_queries_run(spark, sf_dir):
     for name, fn in QUERIES.items():
         df = fn(spark, sf_dir)
         assert df.columns, name
+
+
+def test_every_query_has_an_oracle():
+    """A query without an oracle would silently drop out of the
+    parametrization above."""
+    assert set(QUERIES) == set(ORACLES)
+
+
+def test_reregistering_a_name_raises_and_changes_nothing():
+    queries, oracles = dict(QUERIES), dict(ORACLES)
+    with pytest.raises(ValueError, match="signal_decisions"):
+        query("signal_decisions", "SELECT 1")(lambda spark, sf_dir: None)
+    assert QUERIES == queries and list(QUERIES) == list(queries)
+    assert ORACLES == oracles
+
+
+_REGISTRY_WRITE = re.compile(
+    r"\b(QUERIES|ORACLES)(\[[^\]]*\]\s*=[^=]|\.(clear|pop|popitem|setdefault|update)\()"
+    r"|\bdel\s+(QUERIES|ORACLES)\["
+)
+
+
+def test_only_query_writes_the_registry():
+    """``query()`` is the one registration path: no module assigns
+    QUERIES[...] / ORACLES[...] or reorders them by hand."""
+    root = os.path.dirname(futures_eos_cdc_spark.__file__)
+    writes = set()
+    for d, _, files in os.walk(root):
+        for name in (f for f in files if f.endswith(".py")):
+            path = os.path.join(d, name)
+            with open(path, encoding="utf-8") as fh:
+                writes |= {
+                    (os.path.relpath(path, root), line.strip())
+                    for line in fh
+                    if _REGISTRY_WRITE.search(line)
+                }
+    assert writes == {
+        ("plans/registry.py", "QUERIES[name] = fn"),
+        ("plans/registry.py", "ORACLES[name] = oracle"),
+    }

@@ -67,6 +67,39 @@ def test_recent_orders_take_ordered(spark):
     assert "TakeOrderedAndProject" in top._jdf.queryExecution().executedPlan().toString()
 
 
+def test_jdbc_scan_partitions_pushes_filters_and_feeds_recent_orders(spark):
+    """S6 against a real JDBC source: Spark's bundled embedded Derby, in
+    memory. The range-partitioned read splits into the asked-for number
+    of partitions, loses no row, pushes a predicate into the remote
+    WHERE clause, and recent_orders over it returns the newest rows."""
+    import uuid
+
+    from futures_eos_cdc_spark.sources.jdbc import read_jdbc_table
+
+    url = f"jdbc:derby:memory:orders_{uuid.uuid4().hex};create=true"
+    # created_at_s = base + (7·id mod 100): a permutation, so no ties
+    spark.range(100).select(
+        F.col("id").cast("int").alias("id"),
+        (F.lit(1_700_000_000) + F.col("id") * 7 % 100).alias("created_at_s"),
+    ).write.jdbc(url, "ORDERS", mode="overwrite")
+
+    orders = read_jdbc_table(
+        spark, url, "ORDERS",
+        partition_column="id", lower_bound=0, upper_bound=100, num_partitions=4,
+    )
+    assert orders.rdd.getNumPartitions() == 4
+    assert sorted(r.id for r in orders.collect()) == list(range(100))
+
+    tail = orders.filter(F.col("id") >= 90)
+    plan = tail._jdf.queryExecution().executedPlan().toString()
+    assert "GreaterThanOrEqual(id,90)" in plan.split("PushedFilters:")[1]
+    assert tail.count() == 10
+
+    top = [r.id for r in recent_orders(orders, 5).collect()]
+    want = sorted(range(100), key=lambda i: (i * 7) % 100, reverse=True)[:5]
+    assert top == want
+
+
 def test_decide_sql_equals_column_api(spark):
     """decide() is built as ONE spark.sql parse for construction speed; the
     original Column-API formulation is retained as _decide_column_api and
